@@ -115,8 +115,7 @@ def _shingle_postings(
     Arrow string buffer + offsets, adjacent-token windows become sliced
     views joined by ``binary_join_element_wise`` (no Python string ever
     exists), and per-row dedup runs as dictionary-encode + one numpy
-    lexsort over integer codes. Mirrors the MinHash arrow/hof pattern
-    (same operator family, same oracle)."""
+    lexsort over integer codes."""
     if backend == "hof":
         sh = F.explode(F.array_distinct(_word_shingles(text_col, shingle)))
         return df.select(F.col(id_col), sh.alias("s"))
@@ -248,59 +247,6 @@ def _flat_distinct_shingles(lists, w: int):
     return sh.take(pa.array(kept)), rows_all[kept]
 
 
-def _shingle_array_frame(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle: int,
-    out_col: str = "__sh",
-) -> DataFrame:
-    """(id, array<string>) DISTINCT shingle SETS per doc — the array
-    form `ngram_jaccard_verify` consumes (`array_intersect`/`union`
-    only read set sizes, so the Arrow path's sorted-by-code element
-    order is value-equivalent to the HOF's first-occurrence order).
-    Rows whose token list is null emit ``['']`` like the HOF (see
-    `_flat_distinct_shingles`)."""
-    toks = df.select(
-        F.col(id_col),
-        F.split(F.lower(F.col(text_col)), r"\s+").alias("__toks"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, toks.schema[id_col].dataType, True),
-            T.StructField(out_col, T.ArrayType(T.StringType()), True),
-        ]
-    )
-    w = shingle
-
-    def gen(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for b in batches:
-            tbl = pa.Table.from_batches([b]).combine_chunks()
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            ids_pa = tbl.column(id_col).chunk(0)
-            lists = tbl.column("__toks").chunk(0)
-            got = _flat_distinct_shingles(lists, w)
-            if got is None:
-                values = pa.array([], type=pa.string())
-                counts = np.zeros(n, dtype=np.int64)
-            else:
-                values, rows_kept = got
-                counts = np.bincount(rows_kept, minlength=n)
-            offsets = np.zeros(n + 1, dtype=np.int32)
-            np.cumsum(counts, out=offsets[1:])
-            arr = pa.ListArray.from_arrays(pa.array(offsets), values)
-            yield pa.RecordBatch.from_arrays(
-                [ids_pa, arr], names=[id_col, out_col]
-            )
-
-    return toks.mapInArrow(gen, out_schema)
-
-
 def _splitmix64(x: "np.ndarray") -> "np.ndarray":
     """SplitMix64 finalizer (public domain, Steele et al.) — a full
     64-bit bijective mixer, vectorized over a uint64 array (numpy
@@ -318,7 +264,6 @@ def minhash_signature(
     text_col: str = "text",
     num_perm: int = 32,
     shingle: int = 3,
-    backend: str = "arrow",
 ) -> DataFrame:
     """(id, mh0..mh{P-1}) MinHash signature, fully NARROW (zero
     shuffle). Two phases:
@@ -330,34 +275,13 @@ def minhash_signature(
        so the round-4 ``array_min(transform(hs, h -> xxhash64(h, i)))``
        paid ~P×|shingles| interpreted expression evals per row — 174 s
        for 4.1M short docs at local[32], GC-bound and flat 8→32 cores
-       (measured round 5). The ``backend='arrow'`` default instead
-       flattens every row's hash array into ONE int64 buffer per batch
-       and computes all P minima with vectorized SplitMix64 mixing +
-       ``np.minimum.reduceat`` — same narrow plan shape, ~20× the
-       throughput. ``backend='hof'`` keeps the pure-JVM formulation
-       (different signature VALUES — both are valid MinHash families;
-       every consumer only relies on collision statistics, pinned by
-       the planted-recall tests and the LSH ⊇ exact-truth gate query).
+       (measured round 5). Instead, every row's hash array flattens
+       into ONE int64 buffer per batch and all P minima come from
+       vectorized SplitMix64 mixing + ``np.minimum.reduceat`` — same
+       narrow plan shape, ~20× the throughput. Consumers only rely on
+       collision statistics, pinned by the planted-recall tests and the
+       LSH ⊇ exact-truth gate query.
     """
-    if backend == "hof":
-        sh = _word_shingles(text_col, shingle)
-        row = df.select(
-            F.col(id_col),
-            F.transform(sh, lambda x: F.xxhash64(x)).alias("__hs"),
-        )
-        def perm_min(i: int):
-            # NB: the lambda must take exactly ONE parameter — a
-            # two-param lambda is F.transform's (element, index)
-            # variant and Spark would pass the array index into the
-            # second slot, silently replacing the permutation seed
-            return F.array_min(
-                F.transform("__hs", lambda h: F.xxhash64(h, F.lit(i)))
-            ).alias(f"mh{i}")
-
-        return row.select(id_col, *[perm_min(i) for i in range(num_perm)])
-    if backend != "arrow":
-        raise ValueError(f"backend must be 'arrow' or 'hof', got {backend!r}")
-
     # guide §2.5 input skew: a single-file source caps this whole narrow
     # pipeline (tokenize + hash + numpy combine) at ONE task — fan out
     # first so the per-token work uses every core. No-op when the scan
@@ -705,7 +629,6 @@ def minhash_lsh_pairs(
     shingle: int = 3,
     max_bucket_size: int | None = 1000,
     audit: dict | None = None,
-    backend: str = "arrow",
     observe_audit: bool = False,
 ) -> DataFrame:
     """Near-dup candidate pairs (id_a < id_b, est_jaccard) via banded LSH.
@@ -718,12 +641,11 @@ def minhash_lsh_pairs(
 
     Pass ``audit={}`` to have the cap's drop volume measured into it
     (``lsh_bucket_stats`` keys: n_dropped_buckets/members…) plus the
-    ``signature_backend`` used, so the run's lineage metrics record both
-    what the cap cost (caps must never be silent) and which MinHash
-    family produced the signatures — 'arrow' and 'hof' signatures are
-    VALUE-incompatible (both valid families; cross-backend est_jaccard
-    or bucket matches are meaningless), so persisted signature stores
-    must carry this marker.
+    ``signature_backend`` (always ``'arrow'``), so the run's lineage
+    metrics record both what the cap cost (caps must never be silent)
+    and which MinHash family produced the signatures — persisted
+    signature stores carry this marker, since signatures of different
+    families are VALUE-incompatible.
 
     ``observe_audit=True`` makes the cap stats ride the pair plan as
     ``observe()`` metrics instead of a separate eager aggregate job
@@ -732,15 +654,13 @@ def minhash_lsh_pairs(
     the result."""
     if num_perm % bands:
         raise ValueError("num_perm must be divisible by bands")
-    sig = minhash_signature(
-        df, id_col, text_col, num_perm, shingle, backend=backend
-    ).cache()
+    sig = minhash_signature(df, id_col, text_col, num_perm, shingle).cache()
     buckets = minhash_buckets(sig, id_col, num_perm, bands)
     obs = _pending_cap_observation(
         audit, max_bucket_size, observe_audit, "nfx_minhash_cap", buckets
     )
     if audit is not None:
-        audit["signature_backend"] = backend
+        audit["signature_backend"] = "arrow"
         if max_bucket_size is not None and obs is None:
             audit.update(lsh_bucket_stats(buckets, max_bucket_size))
     pairs = _capped_bucket_pairs(buckets, id_col, max_bucket_size, obs)
@@ -906,28 +826,32 @@ def ngram_jaccard_verify(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle: int = 3,
-    backend: str = "hof",
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs (id_a, id_b): join the
     shingle SETS back to the candidates and compute
     |A∩B| / |A∪B| with array_intersect/array_union — JVM-side.
     Use after LSH to turn candidates into verified duplicates.
 
-    ``backend='hof'`` (default): the interpreted shingle expression.
-    Unlike the postings ops, the verify input is the CAP-BOUNDED
-    candidate set, and at bench-scale candidate volumes the
-    ``'arrow'`` path's extra Python round-trip costs more than the
-    HOF it replaces (measured interleaved: 2.81/2.62 vs 2.44/2.59 s)
-    — so arrow is opt-in here, for corpora whose candidate sets are
-    large enough to amortize it. Either way jaccard values are
-    identical (intersect/union sizes are element-order-independent)."""
+    Shingle sets come from the interpreted shingle expression: unlike
+    the postings ops, the verify input is the CAP-BOUNDED candidate
+    set, and at bench-scale candidate volumes an Arrow round-trip cost
+    more than the expression it replaced (measured interleaved:
+    2.81/2.62 vs 2.44/2.59 s).
+
+    ``pairs`` must be a DETERMINISTIC frame. Its checkpoint below is
+    LAZY: until the first job materializes it, the three plan branches
+    that read it (both arms of the ids union and the final pair join)
+    can each recompute the upstream, so a nondeterministic candidate
+    source could give those branches different pairs. An eager
+    checkpoint would pin one snapshot, at the cost of a synchronous
+    job per call."""
     # the candidate frame feeds THREE plan branches (both arms of the
     # ids union + the final pair join); an expensive upstream (the LSH
     # bucket self-join) would execute three times — checkpoint the tiny
     # (id_a, id_b) projection once (measured: 3× → 1× bucket joins at
-    # 4.1M docs). LAZY, not eager: the checkpointed RDD still
-    # materializes exactly once (at the first job that touches it,
-    # usually the ids broadcast build) and every branch shares it, but
+    # 4.1M docs). LAZY, not eager: the checkpointed RDD normally
+    # materializes once (at the first job that touches it, usually the
+    # ids broadcast build) and every later branch shares it, but
     # the driver no longer pays a synchronous stop-the-world job +
     # scheduling gap per checkpoint — measured 2.39/2.44 → 2.14/2.28 s
     # warm interleaved A/B on the 50k-doc minhash verify chain.
@@ -942,13 +866,12 @@ def ngram_jaccard_verify(
     # (No fan-out here: the candidate set is bounded by the LSH cap, and
     # an extra shuffle + task wave ahead of the checkpoint costs more
     # than the lone-task shingle pass saves — measured A/B.)
-    cand = df.join(ids, id_col, "leftsemi")
-    if backend == "arrow":
-        docs = _shingle_array_frame(cand, id_col, text_col, shingle)
-    else:
-        sh = F.array_distinct(_word_shingles(text_col, shingle))
-        docs = cand.select(F.col(id_col), sh.alias("__sh"))
-    docs = docs.localCheckpoint(eager=False)
+    sh = F.array_distinct(_word_shingles(text_col, shingle))
+    docs = (
+        df.join(ids, id_col, "leftsemi")
+        .select(F.col(id_col), sh.alias("__sh"))
+        .localCheckpoint(eager=False)
+    )
     a = docs.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sa"))
     b = docs.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sb"))
     inter = F.size(F.array_intersect("__sa", "__sb"))

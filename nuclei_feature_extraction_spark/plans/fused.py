@@ -1,7 +1,7 @@
 """Fused single-shuffle feature pipeline — the 100 TB hot path.
 
 The composable pipeline (plans/pipeline.py) is Catalyst-first: window
-families as built-in expressions, kernels as one mapInPandas, as-of as
+families as built-in expressions, kernels as one pandas UDF, as-of as
 a union-window. Ideal for ad-hoc feature subsets — but for the FULL
 feature vector it carries ~120 columns through a window sort and an
 as-of shuffle. Measured on 32 cores, those wide-row stages burn ~3×
@@ -12,7 +12,7 @@ The fused plan moves the entire computation into ONE Arrow pass over
 NARROW input rows (the 6 transcript columns):
 
     scan (6 cols) → repartition(conv_id) → sortWithinPartitions
-      → mapInPandas[ kernels + window features + as-of merges ] → sink
+      → mapInArrow[ kernels + window features + as-of merges ] → sink
 
 Wide rows exist only AFTER the last exchange, flowing straight to the
 sink. Side tables ride in as broadcast sorted arrays (searchsorted —
@@ -21,14 +21,20 @@ side tables too big to broadcast, fall back to the composable
 union-window as-of AFTER the fused pass (still one narrow shuffle for
 the features themselves).
 
+Every time value the kernel reads — the turn ``ts`` and the side
+tables' ``effective_ts`` — is epoch microseconds computed in Spark with
+the cast ``functions/timeutil`` uses, so the pass is independent of the
+session timezone and of TIMESTAMP vs TIMESTAMP_NTZ inputs.
+
 Output is column-for-column allclose-equal to the composable pipeline
-(pinned by tests/test_fused.py), so every correctness property proven
-there (leakage, determinism, text equality) transfers.
+(pinned by tests/test_fused.py, in UTC and non-UTC sessions), so every
+correctness property proven there (leakage, determinism, text
+equality) transfers.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
@@ -274,12 +280,13 @@ def _window_features_pdf(
 def _asof_arrays(
     side: pd.DataFrame, ts_col: str, tie_cols: Sequence[str], value_cols: Sequence[str]
 ):
-    """Sorted flat arrays for the broadcast as-of. String-typed value
-    columns are stored as (codes, categories) — integer codes broadcast
-    smaller and, in the Arrow backend, decode C-side into the output
-    batch so no per-row Python string is ever built."""
+    """Sorted flat arrays for the broadcast as-of; ``ts_col`` holds
+    epoch microseconds (int64). String-typed value columns are stored
+    as (codes, categories) — integer codes broadcast smaller and decode
+    C-side into the output batch so no per-row Python string is ever
+    built."""
     side = side.sort_values([ts_col, *tie_cols], kind="mergesort")
-    rts = side[ts_col].to_numpy(dtype="datetime64[us]").astype(np.int64)
+    rts = side[ts_col].to_numpy(dtype=np.int64)
     vals: dict[str, tuple] = {}
     for c in value_cols:
         arr = side[c].to_numpy()
@@ -296,8 +303,7 @@ def _searchsorted_pick(
 ) -> dict[str, tuple]:
     """Rightmost side row with rts <= ts per output row. Returns, per
     column, ("num", ndarray) or ("cat", codes, cats) with -1 = no match
-    — the caller decodes per backend (object decode for the pandas
-    path, dictionary decode for the Arrow path)."""
+    — the caller dictionary-decodes the codes into the Arrow batch."""
     idx = np.searchsorted(rts, ts_us, side="right") - 1
     ok = idx >= 0
     safe = np.clip(idx, 0, None)
@@ -321,16 +327,6 @@ def _searchsorted_pick(
     return out
 
 
-def _decode_cat_object(codes: np.ndarray, cats: np.ndarray) -> np.ndarray:
-    """(codes, cats) -> object ndarray with None for -1 (the exact
-    value layout the pandas serializer shipped before coding)."""
-    v = np.empty(len(codes), dtype=object)
-    m = codes >= 0
-    v[m] = cats[codes[m]]
-    v[~m] = None
-    return v
-
-
 KERNEL_TIMER_FAMILIES = (
     "cooc", "runlen", "xcooc", "shape", "window", "sidelookup",
 )
@@ -343,7 +339,7 @@ def kernel_timing_accumulators(spark) -> dict:
     over tasks — divide by executor cores for wall share). Lets a run
     manifest expose e.g. the documented hull/shape share per-run.
 
-    AT-LEAST-ONCE semantics: the adds happen inside a mapInPandas
+    AT-LEAST-ONCE semantics: the adds happen inside a mapInArrow
     TRANSFORMATION, where Spark only guarantees at-least-once execution
     — task retries, speculative duplicates, and plan-branch
     recomputation each add their CPU time again. The numbers are a
@@ -352,6 +348,16 @@ def kernel_timing_accumulators(spark) -> dict:
     manifests record the caveat alongside the values)."""
     sc = spark.sparkContext
     return {f: sc.accumulator(0.0) for f in KERNEL_TIMER_FAMILIES}
+
+
+def _epoch_us(c: str):
+    """Epoch microseconds (int64) of a TIMESTAMP or TIMESTAMP_NTZ column,
+    through the same cast as ``timeutil.epoch_seconds``. A null time
+    becomes the int64 minimum, i.e. the earliest instant."""
+    return F.coalesce(
+        F.unix_micros(F.col(c).cast("timestamp")),
+        F.lit(np.iinfo(np.int64).min),
+    )
 
 
 def build_features_fused(
@@ -364,17 +370,15 @@ def build_features_fused(
     num_partitions: int | None = None,
     max_broadcast_side_rows: int = 2_000_000,
     kernel_timers: dict | None = None,
-    backend: str = "arrow",
 ) -> DataFrame:
     """Single-shuffle full feature vector; column-compatible with
     ``build_features(df, ["all"], side_profile, side_config)``.
 
-    ``backend='arrow'`` (default) runs the kernel pass as ``mapInArrow``:
-    strings never box into Python objects (conv_id/role dictionary-
-    encode C-side, text/tool pass through zero-copy, string outputs
-    decode from dictionary codes C-side). ``backend='pandas'`` keeps the
-    original ``mapInPandas`` formulation — value-identical output,
-    pinned by tests/test_fused.py.
+    The kernel pass runs as ``mapInArrow``: strings never box into
+    Python objects (conv_id/role dictionary-encode C-side, text/tool
+    pass through zero-copy, string outputs decode from dictionary codes
+    C-side). A null ``conv_id`` forms one conversation of its own and
+    never matches a profile id.
 
     Side tables within ``max_broadcast_side_rows`` ride into the kernel
     as driver-built broadcast arrays (four flat numpy arrays sorted by
@@ -419,20 +423,28 @@ def build_features_fused(
         # Python to build and pickles as 10^5 objects; four numpy arrays
         # build in ~ms and broadcast as buffers. Sort by (conv, ts, plan)
         # keeps within-conv ts order and the greatest-plan tie-break.
-        ppd = side_profile.toPandas().sort_values(
-            ["conv_id", "effective_ts", "plan"], kind="mergesort"
+        ppd = (
+            side_profile.where(F.col("conv_id").isNotNull())
+            .select(
+                "conv_id", _epoch_us("effective_ts").alias("effective_ts"),
+                "plan", "score",
+            )
+            .toPandas()
+            .sort_values(["conv_id", "effective_ts", "plan"], kind="mergesort")
         )
         plan_codes, plan_cats = pd.factorize(ppd["plan"], sort=False)
         profile_arrays = (
             ppd["conv_id"].to_numpy(dtype="U"),
-            ppd["effective_ts"].to_numpy(dtype="datetime64[us]").astype(np.int64),
+            ppd["effective_ts"].to_numpy(dtype=np.int64),
             plan_codes.astype(np.int64),
             np.asarray(plan_cats, dtype=object),
             ppd["score"].to_numpy(dtype=np.float64),
         )
     cfg_arrays = None
     if side_config is not None:
-        cpd = side_config.toPandas()
+        cpd = side_config.withColumn(
+            "effective_ts", _epoch_us("effective_ts")
+        ).toPandas()
         cfg_arrays = _asof_arrays(
             cpd, "effective_ts", (), [c for c in cpd.columns if c != "effective_ts"]
         )
@@ -485,17 +497,18 @@ def build_features_fused(
 
     prep = df.select("*", F.length("text").cast("double").alias("tlen"))
     nparts = num_partitions or spark.sparkContext.defaultParallelism
-    prep = prep.repartition(nparts, "conv_id").sortWithinPartitions(
-        "conv_id", "ts", "turn_idx"
+    # the kernel's time base rides in as one narrow int64 column, added
+    # after the sort so it never crosses the exchange
+    prep = (
+        prep.repartition(nparts, "conv_id")
+        .sortWithinPartitions("conv_id", "ts", "turn_idx")
+        .withColumn("__ts_us", _epoch_us("ts"))
     )
 
-    def process(chunk: pd.DataFrame, conv_ids=None) -> pd.DataFrame:
+    def process(chunk: pd.DataFrame, conv_pa) -> pd.DataFrame:
         import time as _time
 
         prof, cfg = bc.value
-        # Arrow backend marker: role arrives dictionary-encoded, so the
-        # string-valued side picks stay coded too and decode C-side
-        coded = isinstance(chunk["role"].dtype, pd.CategoricalDtype)
         tm: dict | None = {} if kernel_timers is not None else None
         base = compute_features_pdf(
             chunk, ("cooc", "runlen", "xcooc", "shape"), lags, levels,
@@ -514,6 +527,8 @@ def build_features_fused(
             out[c] = win[c].values
         ts_us = out["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
         if prof is not None:
+            import pyarrow as pa
+
             pconv, prts, ppl_codes, ppl_cats, psc = prof
             conv_arr = out["conv_id"].to_numpy()
             # per-CONVERSATION string searches (one per conv, repeated to
@@ -527,12 +542,15 @@ def build_features_fused(
             # natural-width str, NOT pconv.dtype: casting to the profile's
             # fixed '<U' width would truncate longer out-of-profile ids to
             # a prefix that can falsely match a profile id
-            cids = (
-                conv_ids(starts) if conv_ids is not None
-                else conv_arr[starts].astype(str)
+            cid = conv_pa.take(pa.array(starts))
+            cids = np.asarray(cid.fill_null("").to_pylist(), dtype=str)
+            blo = np.searchsorted(pconv, cids, side="left")
+            # a null conv_id gets an empty block: it never matches
+            bhi = np.where(
+                cid.is_null().to_numpy(zero_copy_only=False), blo,
+                np.searchsorted(pconv, cids, side="right"),
             )
-            blo = np.repeat(np.searchsorted(pconv, cids, side="left"), counts)
-            bhi = np.repeat(np.searchsorted(pconv, cids, side="right"), counts)
+            blo, bhi = np.repeat(blo, counts), np.repeat(bhi, counts)
             lo, hi = blo.copy(), bhi.copy()
             while True:
                 active = lo < hi
@@ -551,24 +569,19 @@ def build_features_fused(
             pick[~ok] = -1
             score = psc[safe].astype(np.float64)
             score[~ok] = np.nan
-            if coded:
-                out["plan"] = pd.Categorical.from_codes(
-                    pick, categories=pd.Index(ppl_cats)
-                )
-            else:
-                out["plan"] = _decode_cat_object(pick, ppl_cats)
+            out["plan"] = pd.Categorical.from_codes(
+                pick, categories=pd.Index(ppl_cats)
+            )
             out["score"] = score
         if cfg is not None:
             picked = _searchsorted_pick(cfg[0], cfg[1], ts_us)
             for c, spec in picked.items():
                 if spec[0] == "num":
                     out[c] = spec[1]
-                elif coded:
+                else:
                     out[c] = pd.Categorical.from_codes(
                         spec[1], categories=pd.Index(spec[2])
                     )
-                else:
-                    out[c] = _decode_cat_object(spec[1], spec[2])
         if tm is not None:
             tm["sidelookup"] = _time.perf_counter() - _t0
             for fam, secs in tm.items():
@@ -577,33 +590,18 @@ def build_features_fused(
                     acc.add(secs)
         return out
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last_conv = pdf["conv_id"].iloc[-1]
-            tail = (pdf["conv_id"] == last_conv).to_numpy()
-            carry = pdf[tail]
-            head = pdf[~tail]
-            if len(head):
-                yield process(head)
-        if carry is not None and len(carry):
-            yield process(carry)
-
     out_names = [f.name for f in fields]
     passthrough_names = set(df.columns) | {"tlen"}
 
     def gen_arrow(batches):
-        """Arrow-native twin of ``gen`` (guide §4): the six narrow input
-        columns cross the boundary ONCE as Arrow buffers; conv_id/role
-        are dictionary-encoded (C-side) instead of boxed into Python
-        strings; text/tool pass through into the output batch ZERO-COPY
-        without ever becoming Python objects; string outputs (role lags,
-        side picks) are built as dictionary codes and decoded C-side.
-        Value-identical to the pandas backend (pinned by test)."""
+        """The six narrow input columns cross the boundary ONCE as Arrow
+        buffers; conv_id/role are dictionary-encoded (C-side) instead of
+        boxed into Python strings; text/tool pass through into the
+        output batch ZERO-COPY without ever becoming Python objects;
+        string outputs (role lags, side picks) are built as dictionary
+        codes and decoded C-side. Batches are re-cut at conversation
+        boundaries: the last conversation of a batch is carried into the
+        next one."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -631,9 +629,11 @@ def build_features_fused(
             tbl = tbl.combine_chunks()
             col = {nm: tbl.column(nm).chunk(0) for nm in tbl.column_names}
             conv_pa = col["conv_id"]
-            conv_codes = pc.dictionary_encode(conv_pa).indices.to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64, copy=False)
+            # null_encoding="encode": null conv_id rows get a code of
+            # their own, i.e. form one conversation
+            conv_codes = pc.dictionary_encode(
+                conv_pa, null_encoding="encode"
+            ).indices.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
             rd = pc.dictionary_encode(col["role"])
             r_ind = rd.indices
             if r_ind.null_count:
@@ -649,17 +649,11 @@ def build_features_fused(
                     "turn_idx": col["turn_idx"].to_numpy(zero_copy_only=False),
                     "role": role_cat,
                     "tool": np.where(tool_isnull, np.nan, 0.0),
-                    "ts": col["ts"].to_numpy(zero_copy_only=False),
+                    "ts": col["__ts_us"].to_numpy().view("datetime64[us]"),
                     "tlen": col["tlen"].to_numpy(zero_copy_only=False),
                 }
             )
-
-            def conv_ids(starts: np.ndarray) -> np.ndarray:
-                return np.asarray(
-                    conv_pa.take(pa.array(starts)).to_pylist(), dtype=str
-                )
-
-            out_pdf = process(chunk, conv_ids=conv_ids)
+            out_pdf = process(chunk, conv_pa)
             arrays = [
                 col[nm] if nm in passthrough_names else to_arrow_col(out_pdf[nm])
                 for nm in out_names
@@ -674,7 +668,9 @@ def build_features_fused(
             if tbl.num_rows == 0:
                 continue
             conv = tbl.column("conv_id")
-            n_tail = pc.sum(pc.equal(conv, conv[-1])).as_py()
+            last = conv[-1]
+            tail = pc.equal(conv, last) if last.is_valid else pc.is_null(conv)
+            n_tail = pc.sum(tail).as_py()
             head = tbl.slice(0, tbl.num_rows - n_tail)
             carry = tbl.slice(tbl.num_rows - n_tail).combine_chunks()
             if head.num_rows:
@@ -682,23 +678,7 @@ def build_features_fused(
         if carry is not None and carry.num_rows:
             yield emit(carry)
 
-    if backend == "arrow":
-        # mapInArrow hands the worker RAW UTC-epoch timestamps, while
-        # the driver-built side arrays come from toPandas() (session-tz
-        # naive). The repo pins the session to UTC (get_spark), where
-        # the two representations coincide; under any other session tz
-        # the as-of searchsorted would compare skewed clocks — fall
-        # back to the pandas backend, which converts both sides with
-        # the same session tz.
-        tz = spark.conf.get("spark.sql.session.timeZone", "")
-        if tz not in ("UTC", "Etc/UTC", "GMT"):
-            out = prep.mapInPandas(gen, schema)
-        else:
-            out = prep.mapInArrow(gen_arrow, schema)
-    elif backend == "pandas":
-        out = prep.mapInPandas(gen, schema)
-    else:
-        raise ValueError(f"backend must be 'arrow' or 'pandas', got {backend!r}")
+    out = prep.mapInArrow(gen_arrow, schema)
     if fallback_profile is not None:
         from nuclei_feature_extraction_spark.operators.asof import asof_join
 

@@ -23,6 +23,14 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = int(os.environ.get("NFX_ARROW_BATCH_ROWS", 50_000))
 
 
+def default_driver_memory() -> str:
+    """Driver heap default: 40% of physical memory, capped at 48g. A
+    fixed 48g let the driver JVM grow past the RAM of smaller hosts,
+    where the kernel OOM-kills it. ``NFX_DRIVER_MEM`` overrides."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, (phys * 2 // 5) >> 30))}g"
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -79,7 +87,10 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_BATCH_ROWS),
         )
-        .config("spark.driver.memory", os.environ.get("NFX_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("NFX_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -3,31 +3,29 @@ column for column (transfers all leakage/determinism properties)."""
 
 import numpy as np
 import pandas as pd
+import pytest
+from pyspark.sql import functions as F
 
 from nuclei_feature_extraction_spark.plans.fused import build_features_fused
 from nuclei_feature_extraction_spark.plans.pipeline import build_features
 
 
 def _sorted(pdf):
-    return pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort").reset_index(
-        drop=True
-    )
+    # ts breaks turn_idx ties among null-conv_id rows, which the
+    # pipelines treat as one conversation drawn from several
+    return pdf.sort_values(
+        ["conv_id", "turn_idx", "ts"], kind="mergesort"
+    ).reset_index(drop=True)
 
 
-def test_fused_matches_composable(spark, tiny_df, side_profile_df, side_config_df):
-    fused = _sorted(
-        build_features_fused(
-            tiny_df, side_profile=side_profile_df, side_config=side_config_df,
-            lags=(1,), levels=(4,),
-        ).toPandas()
-    )
-    comp = _sorted(
-        build_features(
-            tiny_df, ["all"], side_profile=side_profile_df,
-            side_config=side_config_df, lags=(1,), levels=(4,),
-        ).toPandas()
-    )
-    assert len(fused) == len(comp) == tiny_df.count()
+def _assert_parity(df, what="", **kw):
+    """``build_features_fused(df, **kw)`` equals the composable spec
+    ``build_features(df, ["all"], ...)``: floats allclose at 1e-9,
+    strings and nulls equal."""
+    comp_kw = {k: v for k, v in kw.items() if k != "max_broadcast_side_rows"}
+    fused = _sorted(build_features_fused(df, **kw).toPandas())
+    comp = _sorted(build_features(df, ["all"], **comp_kw).toPandas())
+    assert len(fused) == len(comp) == df.count()
     assert set(fused.columns) == set(comp.columns), (
         sorted(set(fused.columns) ^ set(comp.columns))
     )
@@ -37,9 +35,17 @@ def test_fused_matches_composable(spark, tiny_df, side_profile_df, side_config_d
             assert np.allclose(
                 a.to_numpy(dtype=float), b.to_numpy(dtype=float),
                 rtol=1e-9, atol=1e-9, equal_nan=True,
-            ), f"column {c} diverges"
+            ), f"column {c} diverges{what}"
         else:
             assert (a.fillna("∅").astype(str) == b.fillna("∅").astype(str)).all(), c
+    return fused
+
+
+def test_fused_matches_composable(spark, tiny_df, side_profile_df, side_config_df):
+    _assert_parity(
+        tiny_df, side_profile=side_profile_df, side_config=side_config_df,
+        lags=(1,), levels=(4,),
+    )
 
 
 def test_fused_without_sides(spark, tiny_df):
@@ -52,10 +58,10 @@ def test_fused_without_sides(spark, tiny_df):
 def test_fused_text_byte_equality(spark, tiny_df, tiny_pdf):
     got = _sorted(
         build_features_fused(tiny_df, lags=(1,), levels=(4,))
-        .select("conv_id", "turn_idx", "text")
+        .select("conv_id", "turn_idx", "ts", "text")
         .toPandas()
     )
-    want = _sorted(tiny_pdf[["conv_id", "turn_idx", "text"]])
+    want = _sorted(tiny_pdf[["conv_id", "turn_idx", "ts", "text"]])
     assert (got["text"] == want["text"]).all()
 
 
@@ -92,28 +98,11 @@ def test_fused_broadcast_fallback_matches_composable(
 ):
     """Forcing the side tables past the broadcast guard must route them
     through the union-window as-of fallback with identical results."""
-    forced = _sorted(
-        build_features_fused(
-            tiny_df, side_profile=side_profile_df, side_config=side_config_df,
-            lags=(1,), levels=(4,), max_broadcast_side_rows=1,
-        ).toPandas()
+    _assert_parity(
+        tiny_df, " under fallback", side_profile=side_profile_df,
+        side_config=side_config_df, lags=(1,), levels=(4,),
+        max_broadcast_side_rows=1,
     )
-    comp = _sorted(
-        build_features(
-            tiny_df, ["all"], side_profile=side_profile_df,
-            side_config=side_config_df, lags=(1,), levels=(4,),
-        ).toPandas()
-    )
-    assert set(forced.columns) == set(comp.columns)
-    for c in comp.columns:
-        a, b = forced[c], comp[c]
-        if a.dtype.kind in "fc" or b.dtype.kind in "fc":
-            assert np.allclose(
-                a.to_numpy(dtype=float), b.to_numpy(dtype=float),
-                rtol=1e-9, atol=1e-9, equal_nan=True,
-            ), f"column {c} diverges under fallback"
-        else:
-            assert (a.fillna("∅").astype(str) == b.fillna("∅").astype(str)).all(), c
 
 
 def test_fused_full_reference_grid_parity(spark, tiny_df, side_profile_df, side_config_df):
@@ -121,56 +110,63 @@ def test_fused_full_reference_grid_parity(spark, tiny_df, side_profile_df, side_
     (texture.rs:19-20: d∈{1,2,3,5} × K∈{4,8,16,32}) — the width used by
     tools/fullwidth_bench.py; parity must hold there, not only at the
     small default grid."""
-    lags, levels = (1, 2, 3, 5), (4, 8, 16, 32)
-    fused = _sorted(
-        build_features_fused(
-            tiny_df, side_profile=side_profile_df, side_config=side_config_df,
-            lags=lags, levels=levels,
-        ).toPandas()
-    )
-    comp = _sorted(
-        build_features(
-            tiny_df, ["all"], side_profile=side_profile_df,
-            side_config=side_config_df, lags=lags, levels=levels,
-        ).toPandas()
+    fused = _assert_parity(
+        tiny_df, " at full grid", side_profile=side_profile_df,
+        side_config=side_config_df, lags=(1, 2, 3, 5), levels=(4, 8, 16, 32),
     )
     assert len(fused.columns) > 380, len(fused.columns)
-    assert set(fused.columns) == set(comp.columns)
-    for c in comp.columns:
-        a, b = fused[c], comp[c]
-        if a.dtype.kind in "fc" or b.dtype.kind in "fc":
-            assert np.allclose(
-                a.to_numpy(dtype=float), b.to_numpy(dtype=float),
-                rtol=1e-9, atol=1e-9, equal_nan=True,
-            ), f"column {c} diverges at full grid"
-        else:
-            assert (a.fillna("∅").astype(str) == b.fillna("∅").astype(str)).all(), c
 
 
-def test_arrow_backend_matches_pandas_backend(
-    spark, tiny_df, side_profile_df, side_config_df
+@pytest.mark.parametrize("tz", ["America/New_York", "Asia/Kolkata"])
+def test_fused_matches_composable_in_non_utc_session(
+    spark, tiny_df, side_profile_df, side_config_df, tz
 ):
-    """The mapInArrow backend (strings never box into Python) must be
-    VALUE-identical to the original mapInPandas formulation — floats
-    bit-equal via repr, strings/nulls equal."""
-    kw = dict(
-        side_profile=side_profile_df, side_config=side_config_df,
-        lags=(1,), levels=(4,),
-    )
-    arrow = _sorted(
-        build_features_fused(tiny_df, backend="arrow", **kw).toPandas()
-    )
-    pandas = _sorted(
-        build_features_fused(tiny_df, backend="pandas", **kw).toPandas()
-    )
-    assert list(arrow.columns) == list(pandas.columns)
-    for c in arrow.columns:
-        a, b = arrow[c], pandas[c]
-        if a.dtype.kind in "fc":
-            # repr equality = bit equality incl. NaN placement — the
-            # backends must not even differ in last-bit float noise
-            assert (
-                a.astype(float).astype(str) == b.astype(float).astype(str)
-            ).all(), c
-        else:
-            assert (a.fillna("∅").astype(str) == b.fillna("∅").astype(str)).all(), c
+    """The Arrow pass reads every time value as epoch microseconds
+    computed in Spark, so the session timezone cannot skew the
+    time-of-day features or the as-of picks — for TIMESTAMP and
+    TIMESTAMP_NTZ inputs alike, broadcast or fallback as-of."""
+    ntz = lambda df, c: df.withColumn(c, F.col(c).cast("timestamp_ntz"))  # noqa: E731
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        for cast in (False, True):
+            df, prof, cfg = tiny_df, side_profile_df, side_config_df
+            if cast:
+                df, prof, cfg = (
+                    ntz(tiny_df, "ts"), ntz(prof, "effective_ts"),
+                    ntz(cfg, "effective_ts"),
+                )
+            for cap in (2_000_000, 1):
+                _assert_parity(
+                    df, f" in {tz} (ntz={cast}, cap={cap})",
+                    side_profile=prof, side_config=cfg, lags=(1,),
+                    levels=(4,), max_broadcast_side_rows=cap,
+                )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+@pytest.mark.parametrize("batch_rows", [2, None])
+def test_fused_null_conv_id_forms_own_conversation(
+    spark, tiny_pdf, side_profile_df, side_config_df, batch_rows
+):
+    """Null conv_id rows form one conversation of their own and never
+    match a profile id, as in the composable spec — also when a null
+    key ends an Arrow batch (tiny batches split every conversation)."""
+    pdf = tiny_pdf.head(40).copy()
+    pdf.loc[[3, 4, 5, 20, 21], "conv_id"] = None
+    df = spark.createDataFrame(pdf)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    if batch_rows is not None:
+        spark.conf.set(key, str(batch_rows))
+    try:
+        fused = _assert_parity(
+            df, f" at batch size {batch_rows}", side_profile=side_profile_df,
+            side_config=side_config_df, lags=(1,), levels=(4,),
+        )
+    finally:
+        spark.conf.set(key, prev)
+    nulls = fused[fused["conv_id"].isna()]
+    assert len(nulls) == 5
+    assert nulls["plan"].isna().all() and nulls["score"].isna().all()

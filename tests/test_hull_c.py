@@ -87,3 +87,26 @@ def test_keyed_prefix_count_matches_pandas():
     got = _keyed_prefix_count_c(comb, sign, pre=True)
     cs = pd.Series(sign).groupby(comb).cumsum().to_numpy()
     assert np.array_equal(got, (cs - sign).astype(np.float64))
+
+
+def test_cumcount_fallback_matches_compiled_dtype(monkeypatch):
+    """The pandas fallback of ``_cumcount`` returns the compiled
+    counter's dtype (float64) as well as its values."""
+    from nuclei_feature_extraction_spark.functions import kernels
+
+    rng = np.random.default_rng(5)
+    conv = np.repeat(np.arange(20), 50)
+    key = rng.integers(-1, 6, size=len(conv))
+    monkeypatch.setattr(kernels, "_keyed_prefix_count_c", lambda *a, **k: None)
+    got = kernels._cumcount(conv, key)
+    assert got.dtype == np.float64
+    want = np.zeros(len(conv))
+    seen: dict = {}
+    for r, pair in enumerate(zip(conv, key)):
+        seen[pair] = seen.get(pair, 0) + 1
+        want[r] = seen[pair]
+    assert np.array_equal(got, want)
+    monkeypatch.undo()
+    if _hull_clib() is not None:
+        compiled = kernels._cumcount(conv, key)
+        assert compiled.dtype == np.float64 and np.array_equal(compiled, got)

@@ -1,6 +1,6 @@
 """Arrow shingle-postings backend == interpreted-HOF backend, posting
-for posting (VERDICT r7 ask #3: mirror the MinHash arrow/hof pattern
-for the n-gram ops)."""
+for posting; the HOF backend is the reference the Arrow one is pinned
+against."""
 
 import pandas as pd
 import pytest
@@ -57,21 +57,6 @@ def test_contamination_identical_across_backends(spark, docs):
     h = ngram_contamination(corpus, bench, backend="hof").toPandas()
     a = a.sort_values("doc_id").reset_index(drop=True)
     h = h.sort_values("doc_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, h)
-
-
-def test_verify_identical_across_backends(spark, docs):
-    from nuclei_feature_extraction_spark.operators.dedup import (
-        ngram_jaccard_verify,
-    )
-
-    pairs = spark.createDataFrame(
-        [(0, 7), (0, 1), (4, 6), (2, 5)], "id_a long, id_b long"
-    )
-    h = ngram_jaccard_verify(docs, pairs, backend="hof").toPandas()
-    a = ngram_jaccard_verify(docs, pairs, backend="arrow").toPandas()
-    h = h.sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    a = a.sort_values(["id_a", "id_b"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, h)
 
 
