@@ -18,13 +18,18 @@ def _sorted(pdf):
     ).reset_index(drop=True)
 
 
-def _assert_parity(df, what="", **kw):
-    """``build_features_fused(df, **kw)`` equals the composable spec
-    ``build_features(df, ["all"], ...)``: floats allclose at 1e-9,
-    strings and nulls equal."""
-    comp_kw = {k: v for k, v in kw.items() if k != "max_broadcast_side_rows"}
-    fused = _sorted(build_features_fused(df, **kw).toPandas())
-    comp = _sorted(build_features(df, ["all"], **comp_kw).toPandas())
+def _ntz(df, c):
+    return df.withColumn(c, F.col(c).cast("timestamp_ntz"))
+
+
+def _assert_parity(df, what="", cap=2_000_000, **kw):
+    """``build_features_fused(df, max_broadcast_side_rows=cap, **kw)``
+    equals the composable spec ``build_features(df, ["all"], **kw)``:
+    floats allclose at 1e-9, strings and nulls equal."""
+    fused = _sorted(
+        build_features_fused(df, max_broadcast_side_rows=cap, **kw).toPandas()
+    )
+    comp = _sorted(build_features(df, ["all"], **kw).toPandas())
     assert len(fused) == len(comp) == df.count()
     assert set(fused.columns) == set(comp.columns), (
         sorted(set(fused.columns) ^ set(comp.columns))
@@ -100,8 +105,7 @@ def test_fused_broadcast_fallback_matches_composable(
     through the union-window as-of fallback with identical results."""
     _assert_parity(
         tiny_df, " under fallback", side_profile=side_profile_df,
-        side_config=side_config_df, lags=(1,), levels=(4,),
-        max_broadcast_side_rows=1,
+        side_config=side_config_df, lags=(1,), levels=(4,), cap=1,
     )
 
 
@@ -125,7 +129,6 @@ def test_fused_matches_composable_in_non_utc_session(
     computed in Spark, so the session timezone cannot skew the
     time-of-day features or the as-of picks — for TIMESTAMP and
     TIMESTAMP_NTZ inputs alike, broadcast or fallback as-of."""
-    ntz = lambda df, c: df.withColumn(c, F.col(c).cast("timestamp_ntz"))  # noqa: E731
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", tz)
     try:
@@ -133,14 +136,14 @@ def test_fused_matches_composable_in_non_utc_session(
             df, prof, cfg = tiny_df, side_profile_df, side_config_df
             if cast:
                 df, prof, cfg = (
-                    ntz(tiny_df, "ts"), ntz(prof, "effective_ts"),
-                    ntz(cfg, "effective_ts"),
+                    _ntz(df, "ts"), _ntz(prof, "effective_ts"),
+                    _ntz(cfg, "effective_ts"),
                 )
             for cap in (2_000_000, 1):
                 _assert_parity(
                     df, f" in {tz} (ntz={cast}, cap={cap})",
-                    side_profile=prof, side_config=cfg, lags=(1,),
-                    levels=(4,), max_broadcast_side_rows=cap,
+                    cap=cap, side_profile=prof, side_config=cfg,
+                    lags=(1,), levels=(4,),
                 )
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
