@@ -116,10 +116,11 @@ def _window_features_pdf(
     seg = np.cumsum(first)
 
     tlen = pdf["tlen"].to_numpy(dtype=np.float64)
-    # role may arrive CATEGORICAL (the Arrow fused backend dictionary-
-    # encodes it so strings never box into Python objects); lags are
-    # then computed on the int8 codes and emitted as Categoricals with
-    # the same categories — value-identical after decode.
+    # role arrives CATEGORICAL from the fused Arrow pass (dictionary-
+    # encoded so strings never box into Python objects) and as object
+    # strings from the streaming window path; lags are then computed on
+    # the int8 codes and emitted as Categoricals with the same
+    # categories — value-identical after decode.
     role_cat: pd.Categorical | None = None
     if isinstance(pdf["role"].dtype, pd.CategoricalDtype):
         role_cat = pdf["role"].array
