@@ -934,10 +934,10 @@ def q_streaming_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     xcooc, runlen — shape is pytest-allclose) through the driver's own
     gate: events replayed in two micro-batches with every conversation
     crossing the boundary, hash-checked against the SAME DuckDB oracles
-    as the batch prefix queries. The exposed stats use exact-integer
-    accumulators with the oracle's expression tree (streaming/
-    features.py), so the doubles are bit-identical across batch,
-    streaming and DuckDB."""
+    as the batch prefix queries. Streaming runs the batch kernels
+    (functions/kernels.py) with carried per-conversation state, and the
+    exposed stats read only exact-integer accumulators, so the doubles
+    are bit-identical across batch, streaming and DuckDB."""
     from nuclei_feature_extraction_spark.streaming.features import (
         streaming_prefix_features,
     )

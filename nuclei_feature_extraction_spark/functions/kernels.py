@@ -125,14 +125,25 @@ def _seg_cumsum(a: np.ndarray, first: np.ndarray) -> np.ndarray:
     )
 
 
-def _seg_cumsum_block(cols: Sequence[np.ndarray], first: np.ndarray) -> list[np.ndarray]:
+def _seg_cumsum_block(
+    cols: Sequence[np.ndarray],
+    first: np.ndarray,
+    start: Sequence[float] | None = None,
+):
     """Segmented cumsum of MANY columns sharing one label pass. With the
     direct cython binding each column runs through the scan kernel as a
     zero-copy (n, 1) view — no block transposition in, no NaN pre-fill,
     no strided extraction out (those copies cost ~5-10× the scan itself,
     measured). Same per-segment exactness guarantee as ``_seg_cumsum``
     (each segment sums independently, sequential left-to-right order —
-    bit-identical to the pandas groupby path)."""
+    bit-identical to the pandas groupby path).
+
+    ``start``: the carried running sums of the chunk's first
+    conversation, one per column (see ``_Carry``). The call then returns
+    ``(outs, ends)``, ``ends`` being each column's running sum after the
+    chunk's last conversation."""
+    if start is not None:
+        first, cols = _prepend(first, cols, start)
     if _GROUP_CUMSUM is not None:
         labels, ngroups = _seg_labels(first)
         outs = []
@@ -141,14 +152,76 @@ def _seg_cumsum_block(cols: Sequence[np.ndarray], first: np.ndarray) -> list[np.
             out = np.empty_like(v)
             _GROUP_CUMSUM(out, v, labels, ngroups, False, True)
             outs.append(out.reshape(-1))
+    else:
+        seg = np.cumsum(first)
+        n = len(first)
+        block = np.empty((n, len(cols)), dtype=np.float64, order="F")
+        for j, c in enumerate(cols):
+            block[:, j] = c
+        out = pd.DataFrame(block, copy=False).groupby(seg).cumsum().to_numpy()
+        outs = [np.ascontiguousarray(out[:, j]) for j in range(len(cols))]
+    if start is None:
         return outs
-    seg = np.cumsum(first)
-    n = len(first)
-    block = np.empty((n, len(cols)), dtype=np.float64, order="F")
-    for j, c in enumerate(cols):
-        block[:, j] = c
-    out = pd.DataFrame(block, copy=False).groupby(seg).cumsum().to_numpy()
-    return [np.ascontiguousarray(out[:, j]) for j in range(len(cols))]
+    return _scan_ends(outs, first, 0.0)
+
+
+def _seg_extents(
+    first: np.ndarray, u: np.ndarray, y: np.ndarray,
+    start: Sequence[float] | None = None,
+):
+    """Segmented running (max u, min u, max y, min y); ``start`` carries
+    the first conversation's extents in that order, like
+    ``_seg_cumsum_block``."""
+    cols = [u, u, y, y]
+    if start is not None:
+        first, cols = _prepend(first, cols, start)
+    if _GROUP_CUMMAX is not None:
+        labels, ngroups = _seg_labels(first)
+        outs = []
+        for fn, c in zip((_GROUP_CUMMAX, _GROUP_CUMMIN) * 2, cols):
+            v = np.ascontiguousarray(c, dtype=np.float64).reshape(-1, 1)
+            out = np.empty_like(v)
+            fn(out, v, labels, ngroups, False)
+            outs.append(out.reshape(-1))
+    else:
+        seg = np.cumsum(first)
+        outs = [
+            getattr(pd.Series(c).groupby(seg), name)().to_numpy()
+            for name, c in zip(("cummax", "cummin") * 2, cols)
+        ]
+    if start is None:
+        return outs
+    return _scan_ends(outs, first, np.nan)
+
+
+def _prepend(
+    first: np.ndarray, cols: Sequence[np.ndarray], start: Sequence[float]
+) -> tuple[np.ndarray, list[np.ndarray]]:
+    """Put the carried accumulators in front of the chunk as a row of
+    their own that opens the first conversation: the scan then runs in
+    the same order as one call over the whole conversation, and a NaN
+    row is skipped exactly as it would be there."""
+    ext = np.empty(len(first) + 1, dtype=bool)
+    ext[0], ext[1], ext[2:] = True, False, first[1:]
+    return ext, [
+        np.concatenate([[s], np.asarray(c, dtype=np.float64)])
+        for s, c in zip(start, cols)
+    ]
+
+
+def _scan_ends(
+    outs: list[np.ndarray], first: np.ndarray, empty: float
+) -> tuple[list[np.ndarray], np.ndarray]:
+    """Drop the prepended row; the end accumulator of each scan is its
+    last non-NaN value in the last conversation (the scans skip NaN
+    inputs), ``empty`` when there is none."""
+    lo = int(np.flatnonzero(first)[-1])
+    ends = np.full(len(outs), empty)
+    for j, o in enumerate(outs):
+        ok = np.flatnonzero(~np.isnan(o[lo:]))
+        if len(ok):
+            ends[j] = o[lo + ok[-1]]
+    return [o[1:] for o in outs], ends
 
 
 def _seg_pos(first: np.ndarray) -> np.ndarray:
@@ -201,44 +274,152 @@ def _keyed_prefix_count_c(
     return out if rc == 0 else None
 
 
-def _cumcount(conv: np.ndarray, key: np.ndarray) -> np.ndarray:
+def _cumcount(
+    conv: np.ndarray, key: np.ndarray, base: np.ndarray | None = None
+) -> np.ndarray:
     """1-based occurrence count of (conv, key) at each row, as float64
     (compiled single-pass counter; pandas cumcount fallback — identical
-    values and dtype)."""
+    values and dtype). ``base``: carried per-key counts of the first
+    conversation (see ``_Carry``)."""
     comb = _fuse_keys(conv, key)
     got = _keyed_prefix_count_c(comb, None, pre=False)
-    if got is not None:
-        return got
-    return pd.Series(comb).groupby(comb).cumcount().to_numpy() + 1.0
+    if got is None:
+        got = pd.Series(comb).groupby(comb).cumcount().to_numpy() + 1.0
+    return _add_base(got, conv, key, base)
 
 
 def _net_count_before(
-    conv: np.ndarray, key: np.ndarray, sign: np.ndarray
+    conv: np.ndarray, key: np.ndarray, sign: np.ndarray,
+    base: np.ndarray | None = None,
 ) -> np.ndarray:
     """Net (+1/−1) running count of (conv, key) just BEFORE each event —
     the decrement-capable twin of ``_cumcount`` needed when a key's
     multiplicity can shrink (a run moving from length l−1 to l must
     decrement the l−1 length-count). Compiled single-pass counter with
     a pandas groupby-cumsum fallback (identical integer values);
-    sign-0 rows are inert placeholders."""
+    sign-0 rows are inert placeholders. ``base`` as in ``_cumcount``."""
     comb = _fuse_keys(conv, key)
     got = _keyed_prefix_count_c(comb, np.asarray(sign), pre=True)
-    if got is not None:
-        return got
-    cs = pd.Series(sign).groupby(comb).cumsum().to_numpy()
-    return (cs - sign).astype(np.float64)
+    if got is None:
+        cs = pd.Series(sign).groupby(comb).cumsum().to_numpy()
+        got = (cs - sign).astype(np.float64)
+    return _add_base(got, conv, key, base)
+
+
+# ------------------------------------------------------- carried state
+#
+# A kernel called with ``state`` treats the chunk's FIRST conversation
+# as the continuation of one whose earlier rows an earlier call
+# consumed, and hands back the state after the chunk's LAST
+# conversation — so threading the state through consecutive pieces of
+# a stream gives the output of one call over the whole stream. A state
+# is a dict of float64 arrays (counts and level keys are exact
+# integers): ``pos`` (rows consumed), per-family lag values and run or
+# shape scalars, each keyed counter as ``keys ++ counts`` (sorted keys),
+# and ``acc``, the running sums of the family's segmented cumsum. An
+# empty dict is a fresh conversation, which is also what ``state=None``
+# computes — the batch path, which builds no end state.
+
+
+class _Carry:
+    """The chunk-side view of a carried state: absolute row positions,
+    and the carried fields, which only exist when the first
+    conversation really continues (``pos`` > 0)."""
+
+    def __init__(self, first: np.ndarray, state: dict | None):
+        self.state = state
+        self.pos = _seg_pos(first)
+        pos0 = int(state["pos"][0]) if state and "pos" in state else 0
+        self.cont = pos0 > 0
+        if state is not None:
+            nxt = np.flatnonzero(first[1:])
+            self.head = int(nxt[0]) + 1 if len(nxt) else len(first)
+            self.last = int(np.flatnonzero(first)[-1])
+            self.pos[: self.head] += pos0
+
+    def get(self, name: str) -> np.ndarray | None:
+        return np.asarray(self.state[name]) if self.cont else None
+
+    def start(self, name: str, n: int, empty: float = 0.0):
+        """Scan start values: None on the batch path, else the carried
+        accumulators (``empty`` for a fresh conversation)."""
+        if self.state is None:
+            return None
+        return self.get(name) if self.cont else np.full(n, empty)
+
+    def lag(self, x: np.ndarray, d: int) -> np.ndarray:
+        """x[t−d] within the conversation (arbitrary where pos < d),
+        reaching back into the carried last values for the first rows."""
+        src = np.arange(len(x)) - d
+        out = x[np.maximum(src, 0)]
+        if self.cont:
+            tail = self.get("lag")
+            m = (src < 0) & (self.pos >= d)
+            out[m] = tail[len(tail) + src[m]]
+        return out
+
+    def lag_end(self, x: np.ndarray, d: int) -> np.ndarray:
+        """The last ``d`` values of the chunk's last conversation."""
+        seq = np.asarray(x[self.last:], dtype=np.float64)
+        if self.cont and self.last == 0:
+            seq = np.concatenate([self.get("lag"), seq])
+        return seq[-d:]
+
+    def pos_end(self) -> np.ndarray:
+        return np.array([self.pos[-1] + 1.0])
+
+
+def _add_base(
+    counts: np.ndarray, conv: np.ndarray, key: np.ndarray,
+    base: np.ndarray | None,
+) -> np.ndarray:
+    """Add carried per-key counts to the first conversation's rows."""
+    if base is None or not len(base):
+        return counts
+    bk, bc = np.split(base, 2)
+    bk = bk.astype(np.int64)
+    head = conv == conv[0]
+    k = key[head]
+    idx = np.minimum(np.searchsorted(bk, k), len(bk) - 1)
+    counts[head] += np.where(bk[idx] == k, bc[idx], 0.0)
+    return counts
+
+
+def _counter_end(
+    conv: np.ndarray, key: np.ndarray, after: np.ndarray,
+    base: np.ndarray | None,
+) -> np.ndarray:
+    """Per-key counts after the last conversation (``after``: each
+    event's count once applied; keys < 0 are placeholders), plus the
+    untouched carried keys when that conversation is the continued one;
+    ``keys ++ counts`` layout, zero counts dropped."""
+    tail = (conv == conv[-1]) & (key >= 0)
+    k, a = key[tail][::-1], after[tail][::-1]
+    keys, idx = np.unique(k, return_index=True)
+    counts = a[idx]
+    if base is not None and len(base) and conv[0] == conv[-1]:
+        bk, bc = np.split(base, 2)
+        old = ~np.isin(bk, keys)
+        keys = np.concatenate([keys, bk[old].astype(np.int64)])
+        counts = np.concatenate([counts, bc[old]])
+        order = np.argsort(keys, kind="stable")
+        keys, counts = keys[order], counts[order]
+    nz = counts != 0
+    return np.concatenate([keys[nz], counts[nz]]).astype(np.float64)
 
 
 def cooc_prefix(
-    conv: np.ndarray, first: np.ndarray, x: np.ndarray, d: int, k: int
-) -> dict[str, np.ndarray]:
+    conv: np.ndarray, first: np.ndarray, x: np.ndarray, d: int, k: int,
+    state: dict | None = None,
+):
     """Vectorized prefix Haralick stats for lag-d, k-level stream x.
     ``conv`` are integer codes, ``first`` marks conversation starts;
-    rows MUST be sorted by (conv, order)."""
+    rows MUST be sorted by (conv, order). With a carried ``state`` (see
+    ``_Carry``) returns ``(stats, end_state)``."""
     n = len(x)
-    pos = _seg_pos(first)
-    valid = pos >= d
-    i = np.where(valid, x[np.maximum(np.arange(n) - d, 0)], 0).astype(np.int64)
+    c = _Carry(first, state)
+    valid = c.pos >= d
+    i = np.where(valid, c.lag(x, d), 0).astype(np.int64)
     j = x.astype(np.int64)
     w = valid.astype(np.float64)
 
@@ -253,7 +434,7 @@ def cooc_prefix(
         lo, hi = np.minimum(i, j), np.maximum(i, j)
         pairkey = np.where(valid, lo * k + hi, -1)
         diag = (i == j) & valid
-        u = _cumcount(conv, pairkey)
+        u = _cumcount(conv, pairkey, c.get("pair"))
         dc2 = np.where(diag, 4.0, 2.0) * (2 * u - 1)
         dclogc = np.where(
             diag,
@@ -262,21 +443,18 @@ def cooc_prefix(
         )
         # sum-marginal entropy via (i+j) occurrence counts (s(k) = 2u)
         sumkey = np.where(valid, i + j, -1)
-        us = _cumcount(conv, sumkey)
+        us = _cumcount(conv, sumkey, c.get("sum"))
         dslogs = _xlogx(2 * us) - _xlogx(2 * us - 2)
         # marginal entropy HX via the interleaved (i, j) event stream
         ev_conv = np.repeat(conv, 2)
         ev_val = np.empty(2 * n, dtype=np.int64)
         ev_val[0::2] = np.where(valid, i, -1)
         ev_val[1::2] = np.where(valid, j, -1)
-        m = _cumcount(ev_conv, ev_val)
+        m = _cumcount(ev_conv, ev_val, c.get("marg"))
         dm = _xlogx(m) - _xlogx(m - 1)
         row_dm = np.where(valid, dm[0::2] + dm[1::2], 0.0)
 
-        (
-            s_half, c_contrast, c_dissim, c_idm, c_mu, c_ev2, c_eij,
-            c_sa, c_sv, c2, clogc, slogs, mlogm,
-        ) = _seg_cumsum_block(
+        sums = _seg_cumsum_block(
             [
                 w, w * 2 * diff2, w * 2 * adiff, w * 2.0 / (1.0 + diff2),
                 w * (i + j), w * (i * i + j * j).astype(np.float64),
@@ -286,7 +464,14 @@ def cooc_prefix(
                 np.where(valid, dslogs, 0.0), row_dm,
             ],
             first,
+            c.start("acc", 13),
         )
+        if state is not None:
+            sums, acc = sums
+        (
+            s_half, c_contrast, c_dissim, c_idm, c_mu, c_ev2, c_eij,
+            c_sa, c_sv, c2, clogc, slogs, mlogm,
+        ) = sums
         s_tot = 2.0 * s_half  # ordered-pair total S
         ok = s_tot > 0
         contrast = c_contrast / s_tot
@@ -321,12 +506,21 @@ def cooc_prefix(
     nan = np.nan
     for s in out:
         out[s] = np.where(ok, out[s], nan)
-    return out
+    if state is None:
+        return out
+    return out, {
+        "pos": c.pos_end(), "lag": c.lag_end(x, d),
+        "pair": _counter_end(conv, pairkey, u, c.get("pair")),
+        "sum": _counter_end(conv, sumkey, us, c.get("sum")),
+        "marg": _counter_end(ev_conv, ev_val, m, c.get("marg")),
+        "acc": acc,
+    }
 
 
 def xcooc_prefix(
-    conv: np.ndarray, first: np.ndarray, a: np.ndarray, b: np.ndarray, d: int
-) -> dict[str, np.ndarray]:
+    conv: np.ndarray, first: np.ndarray, a: np.ndarray, b: np.ndarray, d: int,
+    state: dict | None = None,
+):
     """CROSS-signal prefix co-occurrence — the 2-D direction analog of
     the reference's GLCM offsets (texture.rs:19: four (dy, dx) image
     directions). A transcript has one axis per SIGNAL instead of two
@@ -341,26 +535,27 @@ def xcooc_prefix(
     with u the 1-based running count of the key), one fused segmented
     cumsum. Stats: contrast, dissimilarity, marginal means, Pearson
     correlation of (i, j), ASM, joint entropy, marginal entropies
-    hx/hy, and mutual information mi = hx + hy − H."""
+    hx/hy, and mutual information mi = hx + hy − H. ``state`` as in
+    ``cooc_prefix``."""
     n = len(a)
-    pos = _seg_pos(first)
-    valid = pos >= d
-    i = np.where(valid, a[np.maximum(np.arange(n) - d, 0)], 0).astype(np.int64)
+    c = _Carry(first, state)
+    valid = c.pos >= d
+    i = np.where(valid, c.lag(a, d), 0).astype(np.int64)
     j = np.where(valid, np.asarray(b, dtype=np.int64), 0)
     w = valid.astype(np.float64)
-    kb = int(j.max(initial=0)) + 1
 
     with np.errstate(divide="ignore", invalid="ignore"):
-        pairkey = np.where(valid, i * kb + j, -1)
-        u = _cumcount(conv, pairkey)
-        ua = _cumcount(conv, np.where(valid, i, -1))
-        ub = _cumcount(conv, np.where(valid, j, -1))
+        # a fixed key stride (b levels < 2^32), so carried keys stay
+        # valid from chunk to chunk
+        pairkey = np.where(valid, (i << 32) + j, -1)
+        akey = np.where(valid, i, -1)
+        bkey = np.where(valid, j, -1)
+        u = _cumcount(conv, pairkey, c.get("pair"))
+        ua = _cumcount(conv, akey, c.get("a"))
+        ub = _cumcount(conv, bkey, c.get("b"))
         fi, fj = i.astype(np.float64), j.astype(np.float64)
         zero = np.zeros(n)
-        (
-            s, c_con, c_dis, c_i, c_j, c_i2, c_j2, c_ij,
-            c2, clogc, aloga, blogb,
-        ) = _seg_cumsum_block(
+        sums = _seg_cumsum_block(
             [
                 w, w * (fi - fj) ** 2, w * np.abs(fi - fj),
                 w * fi, w * fj, w * fi * fi, w * fj * fj, w * fi * fj,
@@ -370,7 +565,14 @@ def xcooc_prefix(
                 np.where(valid, _xlogx(ub) - _xlogx(ub - 1), zero),
             ],
             first,
+            c.start("acc", 12),
         )
+        if state is not None:
+            sums, acc = sums
+        (
+            s, c_con, c_dis, c_i, c_j, c_i2, c_j2, c_ij,
+            c2, clogc, aloga, blogb,
+        ) = sums
         ok = s > 0
         safe_s = np.where(ok, s, 1.0)
         contrast = c_con / safe_s
@@ -395,12 +597,21 @@ def xcooc_prefix(
     nan = np.nan
     for k_ in out:
         out[k_] = np.where(ok, out[k_], nan)
-    return out
+    if state is None:
+        return out
+    return out, {
+        "pos": c.pos_end(), "lag": c.lag_end(a, d),
+        "pair": _counter_end(conv, pairkey, u, c.get("pair")),
+        "a": _counter_end(conv, akey, ua, c.get("a")),
+        "b": _counter_end(conv, bkey, ub, c.get("b")),
+        "acc": acc,
+    }
 
 
 def runlen_prefix(
-    conv: np.ndarray, first: np.ndarray, x: np.ndarray, n_levels: int = 4
-) -> dict[str, np.ndarray]:
+    conv: np.ndarray, first: np.ndarray, x: np.ndarray, n_levels: int = 4,
+    state: dict | None = None,
+):
     """Vectorized prefix run-length stats of integer stream x — the full
     17-stat GLRLM family of the reference (texture.rs:244-301), all O(n)
     prefix-incremental.
@@ -413,20 +624,28 @@ def runlen_prefix(
     interleaved event stream (dec l−1, inc l) where each event of sign s
     on a bucket with prior net count c shifts Σc² by s·(2c + s).
     ``n_levels`` (G) parameterizes the mid/extreme distance weights
-    d = |x − (G−1)/2| (see oracle.RUNLEN_STATS provenance note)."""
+    d = |x − (G−1)/2| (see oracle.RUNLEN_STATS provenance note).
+    ``state`` as in ``cooc_prefix``; it also carries the current run
+    (level, length)."""
     n = len(x)
+    c = _Carry(first, state)
     prev = x[np.maximum(np.arange(n) - 1, 0)]
     chg = first | (x != prev)
+    if c.cont:
+        level, run = c.get("run")
+        chg[0] = x[0] != level
     pos = _seg_pos(chg)  # 0-based position within the current run
+    if c.cont and not chg[0]:
+        pos[: np.argmax(chg) if chg.any() else n] += int(run)
     length = pos + 1.0
-    np1 = _seg_pos(first) + 1.0
+    np1 = c.pos + 1.0
     # r (run count so far) comes out of the fused _seg_cumsum_block below
 
     with np.errstate(divide="ignore", invalid="ignore"):
         short_d = np.where(pos > 0, 1.0 / length**2 - 1.0 / (length - 1) ** 2, 1.0)
         long_d = 2 * length - 1  # l² − (l−1)² (and g(1) = 1 at pos 0)
         startkey = np.where(chg, x, -1)
-        rv = _cumcount(conv, startkey)
+        rv = _cumcount(conv, startkey, c.get("starts"))
         xl = x.astype(np.float64)
         low = 1.0 / (xl + 1) ** 2
         high = (xl + 1) ** 2
@@ -445,15 +664,11 @@ def runlen_prefix(
         ev_sign[0::2] = np.where(grow, -1, 0)
         ev_key[1::2] = ilen
         ev_sign[1::2] = 1
-        net = _net_count_before(ev_conv, ev_key, ev_sign)
+        net = _net_count_before(ev_conv, ev_key, ev_sign, c.get("lens"))
         dsq = np.where(ev_sign != 0, 2.0 * ev_sign * net + 1.0, 0.0)
 
         zero = np.zeros(n)
-        (
-            r, c_sre, c_lre, c_gln, c_lgre, c_hgre,
-            c_srlge, c_srhge, c_srmge, c_srege,
-            c_lrlge, c_lrhge, c_lrmge, c_lrege, c_rln,
-        ) = _seg_cumsum_block(
+        sums = _seg_cumsum_block(
             [
                 chg.astype(np.float64), short_d, long_d,
                 np.where(chg, 2 * rv - 1, zero),
@@ -463,7 +678,15 @@ def runlen_prefix(
                 midw * long_d, extw * long_d, dsq[0::2] + dsq[1::2],
             ],
             first,
+            c.start("acc", 15),
         )
+        if state is not None:
+            sums, acc = sums
+        (
+            r, c_sre, c_lre, c_gln, c_lgre, c_hgre,
+            c_srlge, c_srhge, c_srmge, c_srege,
+            c_lrlge, c_lrhge, c_lrmge, c_lrege, c_rln,
+        ) = sums
         sre, lre, gln = c_sre / r, c_lre / r, c_gln / r
         mean_len = np1 / r
         rlvar = lre - mean_len**2
@@ -474,40 +697,77 @@ def runlen_prefix(
         lrmge, lrege = c_lrmge / r, c_lrege / r
         rln = c_rln / r
 
-    return {
+    out = {
         "n_runs": r, "rp": r / np1, "mean_len": mean_len, "sre": sre,
         "lre": lre, "rlvar": rlvar, "gln": gln, "lgre": lgre, "hgre": hgre,
         "rln": rln, "srlge": srlge, "srhge": srhge, "srmge": srmge,
         "srege": srege, "lrlge": lrlge, "lrhge": lrhge, "lrmge": lrmge,
         "lrege": lrege,
     }
+    if state is None:
+        return out
+    return out, {
+        "pos": c.pos_end(), "run": np.array([x[-1], pos[-1] + 1.0]),
+        "starts": _counter_end(conv, startkey, rv, c.get("starts")),
+        "lens": _counter_end(ev_conv, ev_key, net + ev_sign,
+                             c.get("lens")),
+        "acc": acc,
+    }
 
 
-def shape_prefix(
-    conv: np.ndarray, first: np.ndarray, u: np.ndarray, y: np.ndarray
-) -> dict[str, np.ndarray]:
-    """Vectorized prefix PCA of the (u, y) scatter per conversation.
-    Closed-form 2×2 eigen-decomposition from five segmented cumsums;
-    elliptic deviation (A8) from nine more (raw moments to order 4)."""
-    np1 = _seg_pos(first) + 1.0
-    n = len(u)
+def _elapsed(
+    first: np.ndarray, ts: np.ndarray, c: _Carry | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """(ts − t0, t0): time since the conversation's first turn, the
+    carried anchor ``t0`` for a continued first conversation."""
+    t0 = ts[np.maximum.accumulate(np.where(first, np.arange(len(ts)), 0))]
+    if c is not None and c.cont:
+        t0[: c.head] = c.get("t0")[0]
+    return ts - t0, t0
+
+
+def shape_moments_prefix(
+    conv: np.ndarray, first: np.ndarray, ts: np.ndarray, y: np.ndarray,
+    state: dict | None = None,
+):
+    """Vectorized prefix PCA of the (u, y) scatter per conversation, u
+    being the time since the conversation's first turn (``ts`` in
+    seconds). Closed-form 2×2 eigen-decomposition from five segmented
+    cumsums; elliptic deviation (A8) from nine more (raw moments to
+    order 4); path length, bounding span and compacity. ``state`` as in
+    ``cooc_prefix``; it also carries the anchor ``t0``, the previous
+    point and the u/y extents."""
+    c = _Carry(first, state)
+    np1 = c.pos + 1.0
+    n = len(ts)
+    u, t0 = _elapsed(first, ts, c)
     du = u - u[np.maximum(np.arange(n) - 1, 0)]
     dy = y - y[np.maximum(np.arange(n) - 1, 0)]
-    seglen = np.where(first, 0.0, np.sqrt(du**2 + dy**2))
+    fresh = first
+    if c.cont:
+        prev_u, prev_y = c.get("prev")
+        du[0], dy[0] = u[0] - prev_u, y[0] - prev_y
+        fresh = first.copy()
+        fresh[0] = False
+    seglen = np.where(fresh, 0.0, np.sqrt(du**2 + dy**2))
     moment_pq = ((3, 0), (2, 1), (1, 2), (0, 3),
                  (4, 0), (3, 1), (2, 2), (1, 3), (0, 4))
-    (su, sy, suu, syy, suy, path, *mom) = _seg_cumsum_block(
+    sums = _seg_cumsum_block(
         [u, y, u * u, y * y, u * y, seglen]
         + [u**p * y**q for p, q in moment_pq],
         first,
+        c.start("acc", 15),
     )
+    if state is not None:
+        sums, acc = sums
+    (su, sy, suu, syy, suy, path, *mom) = sums
     with np.errstate(divide="ignore", invalid="ignore"):
         mu, my = su / np1, sy / np1
         a = suu / np1 - mu**2
-        c = syy / np1 - my**2
+        c2 = syy / np1 - my**2
         b = suy / np1 - mu * my
-        tr = a + c
-        disc = np.sqrt(((a - c) / 2) ** 2 + b**2)
+        tr = a + c2
+        disc = np.sqrt(((a - c2) / 2) ** 2 + b**2)
         l1 = tr / 2 + disc
         l2 = np.clip(tr / 2 - disc, 0.0, None)
         valid = (np1 >= 2) & (l1 > 0)
@@ -516,31 +776,19 @@ def shape_prefix(
         ecc = np.where(valid, np.sqrt(np.clip((l1 - l2) / l1, 0, 1)), np.nan)
         # eigenvector of l1: (b, l1-a); when b≈0 axis-aligned; degenerate
         # (disc≈0, no principal direction) → NaN like shape.rs:142-184
-        vx = np.where(np.abs(b) > 1e-12, b, np.where(a >= c, 1.0, 0.0))
-        vy = np.where(np.abs(b) > 1e-12, l1 - a, np.where(a >= c, 0.0, 1.0))
+        vx = np.where(np.abs(b) > 1e-12, b, np.where(a >= c2, 1.0, 0.0))
+        vy = np.where(np.abs(b) > 1e-12, l1 - a, np.where(a >= c2, 0.0, 1.0))
         angle = np.where(
             valid & (disc > 1e-12), np.arctan2(vy, vx) % np.pi, np.nan
         )
     # A8-A10 analogs: arc length (cumsum of segment lengths, in the
     # block above), bounding span area (segmented cummax/cummin),
     # compacity = len²/(4π·area)
-    if _GROUP_CUMMAX is not None:
-        _labels, _ngroups = _seg_labels(first)
-        ext = np.empty((len(u), 4), dtype=np.float64, order="F")
-        for _j, (_fn, _src) in enumerate(
-            [(_GROUP_CUMMAX, u), (_GROUP_CUMMIN, u),
-             (_GROUP_CUMMAX, y), (_GROUP_CUMMIN, y)]
-        ):
-            _v = np.ascontiguousarray(_src, dtype=np.float64).reshape(-1, 1)
-            _fn(ext[:, _j].reshape(-1, 1), _v, _labels, _ngroups, False)
-        span_u = ext[:, 0] - ext[:, 1]
-        span_y = ext[:, 2] - ext[:, 3]
-    else:
-        seg = np.cumsum(first)
-        gb_u = pd.Series(u).groupby(seg)
-        gb_y = pd.Series(y).groupby(seg)
-        span_u = gb_u.cummax().to_numpy() - gb_u.cummin().to_numpy()
-        span_y = gb_y.cummax().to_numpy() - gb_y.cummin().to_numpy()
+    ext = _seg_extents(first, u, y, c.start("ext", 4, np.nan))
+    if state is not None:
+        ext, ext_end = ext
+    span_u = ext[0] - ext[1]
+    span_y = ext[2] - ext[3]
     area = span_u * span_y
     two_plus = np1 >= 2
     with np.errstate(divide="ignore", invalid="ignore"):
@@ -582,10 +830,10 @@ def shape_prefix(
 
         m40, m31, m22 = central(4, 0), central(3, 1), central(2, 2)
         m13, m04 = central(1, 3), central(0, 4)
-        det = a * c - b**2
-        inv_ok = (np1 >= 3) & (det > 1e-12 * a * c)
+        det = a * c2 - b**2
+        inv_ok = (np1 >= 3) & (det > 1e-12 * a * c2)
         safe_det = np.where(inv_ok, det, 1.0)
-        a11, a12, a22 = c / safe_det, -b / safe_det, a / safe_det
+        a11, a12, a22 = c2 / safe_det, -b / safe_det, a / safe_det
         er4 = (
             a11**2 * m40 + 4 * a11 * a12 * m31
             + (2 * a11 * a22 + 4 * a12**2) * m22
@@ -594,11 +842,33 @@ def shape_prefix(
         ell_dev = np.where(
             inv_ok, np.sqrt(np.clip(er4 - 4.0, 0.0, None)), np.nan
         )
-    hull_area, hull_perim = hull_prefix(first, u, y)
+    out = {
+        "pca_major": major, "pca_minor": minor,
+        "pca_angle": angle, "pca_eccentricity": ecc,
+        "path_len": np.where(two_plus, path, np.nan),
+        "span_area": np.where(two_plus, area, np.nan),
+        "compacity": compacity,
+        "elliptic_deviation": ell_dev,
+    }
+    if state is None:
+        return out
+    return out, {
+        "pos": c.pos_end(), "t0": t0[-1:], "prev": np.array([u[-1], y[-1]]),
+        "ext": ext_end, "acc": acc,
+    }
+
+
+def shape_prefix(
+    conv: np.ndarray, first: np.ndarray, ts: np.ndarray, y: np.ndarray
+) -> dict[str, np.ndarray]:
+    """All shape stats of whole conversations: the carry-aware moments
+    of ``shape_moments_prefix`` plus the prefix convex hull."""
+    out = shape_moments_prefix(conv, first, ts, y)
+    hull_area, hull_perim = hull_prefix(first, _elapsed(first, ts)[0], y)
+    two_plus = _seg_pos(first) >= 1
+    span = out["span_area"]
     with np.errstate(divide="ignore", invalid="ignore"):
-        hull_dev = np.where(
-            two_plus & (area > 0), 1.0 - hull_area / area, np.nan
-        )
+        hull_dev = np.where(span > 0, 1.0 - hull_area / span, np.nan)
         # equivalent perimeter (shape.rs:91, geometric_features crate;
         # public formula): perimeter of the circle with the hull's area
         equiv_perim = np.where(
@@ -606,18 +876,13 @@ def shape_prefix(
             2.0 * np.sqrt(np.pi * np.clip(hull_area, 0, None)),
             np.nan,
         )
-    return {
-        "pca_major": major, "pca_minor": minor,
-        "pca_angle": angle, "pca_eccentricity": ecc,
-        "path_len": np.where(two_plus, path, np.nan),
-        "span_area": np.where(two_plus, area, np.nan),
-        "compacity": compacity,
-        "elliptic_deviation": ell_dev,
+    out.update({
         "hull_area": np.where(two_plus, hull_area, np.nan),
         "hull_perimeter": np.where(two_plus, hull_perim, np.nan),
         "hull_deviation": hull_dev,
         "equiv_perimeter": equiv_perim,
-    }
+    })
+    return out
 
 
 # C twin of the per-point hull loop below (guide §4.2: hand whole
@@ -1149,8 +1414,7 @@ def compute_features_pdf(
     if "shape" in families:
         _t = _time.perf_counter()
         ts_s = pdf["ts"].to_numpy(dtype="datetime64[ns]").astype(np.int64) / 1e9
-        t0 = ts_s[np.maximum.accumulate(np.where(first, np.arange(n), 0))]
-        stats = shape_prefix(conv, first, ts_s - t0, tlen)
+        stats = shape_prefix(conv, first, ts_s, tlen)
         for s, v in stats.items():
             block[slot[f"shape_{s}"]] = v
         _mark("shape", _t)

@@ -6,6 +6,7 @@ DuckDB's ``epoch()`` on naive timestamps exactly."""
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -23,3 +24,15 @@ def epoch_long(c: Column | str) -> Column:
     """Whole epoch seconds (long, truncated) — the numeric ordering key
     for rangeBetween frames."""
     return _col(c).cast("timestamp").cast("long")
+
+
+def epoch_us(c: Column | str) -> Column:
+    """Epoch microseconds (long) through the same cast as
+    ``epoch_seconds`` — the time base the Arrow and pandas kernels read,
+    so they never see Spark's session-local wall-clock conversion of a
+    TIMESTAMP column. A null time becomes the int64 minimum, i.e. the
+    earliest instant."""
+    return F.coalesce(
+        F.unix_micros(_col(c).cast("timestamp")),
+        F.lit(np.iinfo(np.int64).min),
+    )

@@ -50,6 +50,7 @@ from nuclei_feature_extraction_spark.functions.kernels import (
     _seg_cumsum,
     _seg_pos,
 )
+from nuclei_feature_extraction_spark.functions.timeutil import epoch_us
 
 TWO_PI = 2.0 * 3.141592653589793
 
@@ -351,16 +352,6 @@ def kernel_timing_accumulators(spark) -> dict:
     return {f: sc.accumulator(0.0) for f in KERNEL_TIMER_FAMILIES}
 
 
-def _epoch_us(c: str):
-    """Epoch microseconds (int64) of a TIMESTAMP or TIMESTAMP_NTZ column,
-    through the same cast as ``timeutil.epoch_seconds``. A null time
-    becomes the int64 minimum, i.e. the earliest instant."""
-    return F.coalesce(
-        F.unix_micros(F.col(c).cast("timestamp")),
-        F.lit(np.iinfo(np.int64).min),
-    )
-
-
 def build_features_fused(
     df: DataFrame,
     side_profile: DataFrame | None = None,
@@ -427,7 +418,7 @@ def build_features_fused(
         ppd = (
             side_profile.where(F.col("conv_id").isNotNull())
             .select(
-                "conv_id", _epoch_us("effective_ts").alias("effective_ts"),
+                "conv_id", epoch_us("effective_ts").alias("effective_ts"),
                 "plan", "score",
             )
             .toPandas()
@@ -444,7 +435,7 @@ def build_features_fused(
     cfg_arrays = None
     if side_config is not None:
         cpd = side_config.withColumn(
-            "effective_ts", _epoch_us("effective_ts")
+            "effective_ts", epoch_us("effective_ts")
         ).toPandas()
         cfg_arrays = _asof_arrays(
             cpd, "effective_ts", (), [c for c in cpd.columns if c != "effective_ts"]
@@ -503,7 +494,7 @@ def build_features_fused(
     prep = (
         prep.repartition(nparts, "conv_id")
         .sortWithinPartitions("conv_id", "ts", "turn_idx")
-        .withColumn("__ts_us", _epoch_us("ts"))
+        .withColumn("__ts_us", epoch_us("ts"))
     )
 
     def process(chunk: pd.DataFrame, conv_pa) -> pd.DataFrame:

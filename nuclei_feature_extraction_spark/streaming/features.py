@@ -1,35 +1,35 @@
-"""STREAMING prefix kernel features — the flagship's co-occurrence and
-shape families maintained incrementally per conversation with
+"""STREAMING prefix kernel features — the flagship's cooc, xcooc,
+runlen and shape families maintained per conversation with
 ``applyInPandasWithState`` (SURVEY §2.7: custom stateful operators for
 live transcript feeds).
 
-The batch kernels express prefix stats as segmented cumsums over whole
-sorted conversations; a stream sees a conversation in arbitrary
-micro-batch slices, so here the SUFFICIENT STATISTICS live in the group
-state instead — and both families need only FIXED-SIZE state:
+Each micro-batch of a conversation runs through the SAME batch kernels
+as the flagship (``functions/kernels.py``): the group state is the
+kernels' carried state (rows consumed, lag values, per-key counts, the
+current run, the shape anchor and extents, the running sums), threaded
+from one micro-batch into the next. So the emitted values equal the
+batch ``prefix_features`` output by construction, not by a second
+derivation: counting stats bit for bit, float moments up to summation
+order (pinned by tests/test_streaming_stateful.py across replays that
+split conversations mid-stream, and by the carry-split property tests
+of the kernels).
 
-- cooc (lag 1, K=4): the symmetric K×K transition-count matrix (16
-  longs) + the previous level. Every Haralick stat is a closed-form
-  function of that matrix, so each arriving turn is one O(K²) numpy
-  evaluation — no history kept.
-- shape: the 2-D moment sums (n, Σu, Σy, Σu², Σy², Σuy), the path
-  length, the running u/y extents, the conversation anchor timestamp,
-  and the previous point. PCA axes/angle/eccentricity, span area and
-  compacity are closed-form in those.
-
-Emitted values match the batch ``prefix_features`` output column for
-column (pinned by tests/test_streaming_stateful.py across a replay that
-splits conversations mid-stream) — the batch path computes the same
-mathematics via incremental identities, so agreement is allclose, not
-bitwise.
+Event time reaches the kernels as epoch microseconds computed in Spark
+(``timeutil.epoch_us``), so the output does not depend on the session
+timezone.
 
 Rows inside a micro-batch are sorted by (ts, turn_idx); correctness
 across micro-batches requires per-conversation event-time monotonicity
-between batches (append-only transcript logs replayed in order)."""
+between batches (append-only transcript logs replayed in order).
+
+CHECKPOINT COMPATIBILITY: the state layout is the kernels' carried
+state. A checkpoint written by an earlier layout (the per-family count
+matrices and moment scalars) cannot be restarted: Spark's state-schema
+check rejects it before any state is read. Start a fresh checkpoint
+directory after upgrading."""
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -38,34 +38,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from nuclei_feature_extraction_spark.functions.kernels import ROLE_IDX
-from nuclei_feature_extraction_spark.functions.oracle import discretize_log
+from nuclei_feature_extraction_spark.functions.kernels import (
+    RUNLEN_N_LEVELS,
+    RUNLEN_SIGNALS,
+    _role_idx_array,
+    cooc_prefix,
+    runlen_prefix,
+    shape_moments_prefix,
+    xcooc_prefix,
+)
+from nuclei_feature_extraction_spark.functions.oracle import (
+    COOC_STATS,
+    RUNLEN_STATS,
+    SHAPE_STATS,
+    XCOOC_STATS,
+    discretize_log,
+)
+from nuclei_feature_extraction_spark.functions.timeutil import epoch_us
 
-K = 4
-KA = 5  # role levels (4 named + other)
+K = 4  # tlen levels of the streamed cooc (lag 1) and of tlen4
 
-COOC_OUT = [
-    "correlation", "contrast", "dissimilarity", "entropy", "asm",
-    "sum_average", "sum_variance", "sum_entropy", "sum_of_squares",
-    "idm", "difference_average", "difference_variance", "imc1", "imc2",
-]
-SHAPE_OUT = [
-    "pca_major", "pca_minor", "pca_angle", "pca_eccentricity",
-    "path_len", "span_area", "compacity",
-]
-XCOOC_OUT = [
-    "contrast", "dissimilarity", "mean_a", "mean_b", "correlation",
-    "asm", "entropy", "hx", "hy", "mi",
-]
-RUNLEN_OUT = [
-    "n_runs", "rp", "mean_len", "sre", "lre", "rlvar", "gln", "lgre",
-    "hgre", "rln", "srlge", "srhge", "srmge", "srege", "lrlge", "lrhge",
-    "lrmge", "lrege",
-]
-RUNLEN_SIGS = (("role", 5), ("has_tool", 2), ("tlen4", 4), ("posb", 4))
-# per-signal scalar state layout: r, cur_lev, cur_len, then the 14
-# accumulators, then G per-level run-start counts
-_RL_ACC = 14
+COOC_OUT = COOC_STATS
+SHAPE_OUT = SHAPE_STATS[:7]  # the moment stats; the hull is not carried
+XCOOC_OUT = XCOOC_STATS
+RUNLEN_OUT = RUNLEN_STATS
+RUNLEN_SIGS = tuple((sig, RUNLEN_N_LEVELS[sig]) for sig in RUNLEN_SIGNALS)
 
 OUT_SCHEMA = (
     "conv_id string, turn_idx int, ts timestamp, "
@@ -80,26 +77,17 @@ OUT_SCHEMA = (
         for st in RUNLEN_OUT
     )
 )
+# one carried kernel state per kernel call (see kernels._Carry)
+CARRIED = ("cooc", "xcooc", "shape") + tuple(
+    f"runlen_{sig}" for sig in RUNLEN_SIGNALS
+)
 STATE_SCHEMA = (
-    "counts array<long>, prev_lev int, n long, su double, sy double, "
-    "suu double, syy double, suy double, path double, "
-    "umin double, umax double, ymin double, ymax double, "
-    "t0_us long, prev_u double, prev_y double, "
-    "xcounts array<long>, prev_role int, "
-    + ", ".join(
-        f"rl_{sig} array<double>, rlh_len_{sig} array<long>, "
-        f"rlh_cnt_{sig} array<long>"
-        for sig, _ in RUNLEN_SIGS
-    )
+    ", ".join(f"{f} map<string, array<double>>" for f in CARRIED)
     # out-of-order guard: per-conversation event-time high-water mark
     # ((ts µs, turn_idx) of the last accepted row) + dropped-row count
     + ", last_us long, last_turn int, n_late long"
     # watermarked reorder buffer (late_policy='buffer'): rows held until
-    # the event-time watermark passes them; empty under other policies.
-    # CHECKPOINT COMPATIBILITY: these fields were added in round 6 — a
-    # streaming query CANNOT restart from a checkpoint written before
-    # them (Spark's state-store schema check fails); start a fresh
-    # checkpoint dir after upgrading
+    # the event-time watermark passes them; empty under other policies
     + ", buf_us array<long>, buf_turn array<long>, buf_rolei array<long>"
     + ", buf_htool array<long>, buf_tlen array<double>"
 )
@@ -120,6 +108,25 @@ def _late_mask(
     if len(us) > 1:
         late[1:] |= (us[1:] == us[:-1]) & (turn[1:] == turn[:-1])
     return late
+
+
+def _release(
+    pend: dict[str, np.ndarray], arr: dict[str, np.ndarray], wm_us: int
+) -> tuple[dict[str, np.ndarray], dict[str, np.ndarray]]:
+    """Watermarked reorder buffer: merge the pending rows with the new
+    ones, sort by (ts, turn_idx) and split at the event-time watermark
+    → (rows released in order, rows still pending). A shuffled
+    micro-batch replay within the watermark delay thus emits the exact
+    batch output; rows later than even that horizon fall through to the
+    late policy's drop-with-count."""
+    merged = {k: np.concatenate([pend[k], arr[k]]) for k in arr}
+    merged = _take(merged, np.lexsort((merged["turn"], merged["us"])))
+    ready = merged["us"] < wm_us
+    return _take(merged, ready), _take(merged, ~ready)
+
+
+def _take(arr: dict[str, np.ndarray], mask) -> dict[str, np.ndarray]:
+    return {k: v[mask] for k, v in arr.items()}
 
 
 def _apply_late_policy(
@@ -145,243 +152,6 @@ def _apply_late_policy(
             "or pass late_policy='drop' / 'buffer'"
         )
     return ~late, int(late.sum())
-
-_XAI = np.arange(KA, dtype=np.float64)[:, None]  # role axis (rows)
-_XBJ = np.arange(K, dtype=np.float64)[None, :]   # level axis (cols)
-
-_IV = np.arange(K, dtype=np.float64)
-_IG, _JG = np.meshgrid(_IV, _IV, indexing="ij")
-_KSUM = (_IG + _JG).astype(np.int64)
-_LDIFF = np.abs(_IG - _JG).astype(np.int64)
-
-
-def _xlogx(a):
-    return np.where(a > 0, a * np.log(np.maximum(a, 1e-300)), 0.0)
-
-
-# one-hot aggregation masks for the sum/difference marginals: a (n, 16)
-# probability block @ mask.T gives all rows' marginals in one matmul
-_M_SUM = np.zeros((2 * K - 1, K * K))
-_M_DIFF = np.zeros((K, K * K))
-for _i in range(K):
-    for _j in range(K):
-        _M_SUM[_i + _j, _i * K + _j] = 1.0
-        _M_DIFF[abs(_i - _j), _i * K + _j] = 1.0
-
-
-def _cooc_stats_vec(C: np.ndarray) -> np.ndarray:
-    """(n, K, K) count snapshots → (n, 14) Haralick stats, fully
-    vectorized over the rows of a micro-batch group (the per-row
-    tiny-matrix numpy formulation cost ~50 numpy dispatches per row —
-    ~20× this).
-
-    The exact-accumulator stats (contrast/dissimilarity/sum_average/
-    sum_of_squares/correlation) are computed as INTEGER-sum-then-divide
-    with the same expression tree as the batch kernel and the DuckDB
-    oracle — integer sums are order-independent in float64, so the final
-    doubles are bit-identical across batch, streaming and oracle (the
-    driver's value-hash is over string reprs, not allclose)."""
-    n = len(C)
-    s = C.sum(axis=(1, 2))
-    ok = s > 0
-    safe = np.where(ok, s, 1.0)
-    p = C / safe[:, None, None]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        # ---- exact-integer accumulators, sum-then-divide -------------
-        con_c = np.einsum("nij,ij->n", C, (_IG - _JG) ** 2)
-        dis_c = np.einsum("nij,ij->n", C, np.abs(_IG - _JG))
-        mu_c = np.einsum("nij,ij->n", C, _IG)      # Σ rows (i+j) by symmetry
-        m2_c = np.einsum("nij,ij->n", C, _IG * _IG)
-        eij_c = np.einsum("nij,ij->n", C, _IG * _JG)
-        contrast = con_c / safe
-        dissim = dis_c / safe
-        mu = mu_c / safe
-        var = m2_c / safe - mu * mu
-        eij = eij_c / safe
-        corr = np.where(var > 1e-9, (eij - mu * mu) / var, np.nan)
-        sa = 2.0 * mu_c / safe
-        # ---- float-accumulated stats (pytest-allclose verified) ------
-        px = p.sum(axis=2)
-        entropy = -_xlogx(p).sum(axis=(1, 2))
-        asm = (p**2).sum(axis=(1, 2))
-        p16 = p.reshape(n, K * K)
-        psum = p16 @ _M_SUM.T
-        kk = np.arange(2 * K - 1, dtype=np.float64)
-        sv = ((kk[None, :] - sa[:, None]) ** 2 * psum).sum(axis=1)
-        se = -_xlogx(psum).sum(axis=1)
-        idm = np.einsum("nij,ij->n", p, 1.0 / (1.0 + (_IG - _JG) ** 2))
-        da = dissim
-        dv = contrast - da * da
-        hx = -_xlogx(px).sum(axis=1)
-        imc1 = np.where(hx > 1e-9, (entropy - 2 * hx) / hx, np.nan)
-        imc2 = np.sqrt(np.clip(1.0 - np.exp(-2.0 * (2 * hx - entropy)), 0.0, None))
-    out = np.column_stack([
-        corr, contrast, dissim, entropy, asm, sa, sv, se, var,
-        idm, da, dv, imc1, imc2,
-    ])
-    out[~ok] = np.nan
-    return out
-
-
-def _xcooc_stats_vec(C: np.ndarray) -> np.ndarray:
-    """(n, KA, K) asymmetric cross-count snapshots → (n, 10) stats
-    (same formulas/guards as kernels.xcooc_prefix).
-
-    Exact-accumulator stats (contrast/dissimilarity/means/correlation/
-    asm) use integer-sum-then-divide with the oracle's expression tree —
-    see _cooc_stats_vec — so their doubles are bit-identical across
-    engines; the entropies stay float-accumulated (pytest-allclose)."""
-    s = C.sum(axis=(1, 2))
-    ok = s > 0
-    safe = np.where(ok, s, 1.0)
-    p = C / safe[:, None, None]
-    _GA = np.broadcast_to(_XAI, (KA, K))
-    _GB = np.broadcast_to(_XBJ, (KA, K))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        con_c = np.einsum("nij,ij->n", C, (_GA - _GB) ** 2)
-        dis_c = np.einsum("nij,ij->n", C, np.abs(_GA - _GB))
-        ai_c = np.einsum("nij,ij->n", C, _GA)
-        bj_c = np.einsum("nij,ij->n", C, _GB)
-        i2_c = np.einsum("nij,ij->n", C, _GA * _GA)
-        j2_c = np.einsum("nij,ij->n", C, _GB * _GB)
-        ij_c = np.einsum("nij,ij->n", C, _GA * _GB)
-        c2_c = (C * C).sum(axis=(1, 2))
-        contrast = con_c / safe
-        dissim = dis_c / safe
-        mean_a = ai_c / safe
-        mean_b = bj_c / safe
-        var_a = i2_c / safe - mean_a * mean_a
-        var_b = j2_c / safe - mean_b * mean_b
-        cov = ij_c / safe - mean_a * mean_b
-        denom = var_a * var_b
-        corr = np.where(
-            denom > 1e-9, cov / np.sqrt(np.where(denom > 0, denom, 1.0)),
-            np.nan,
-        )
-        asm = c2_c / (safe * safe)
-        pa = p.sum(axis=2)
-        pb = p.sum(axis=1)
-        entropy = -_xlogx(p).sum(axis=(1, 2))
-        hx = -_xlogx(pa).sum(axis=1)
-        hy = -_xlogx(pb).sum(axis=1)
-        mi = hx + hy - entropy
-    out = np.column_stack([
-        contrast, dissim, mean_a, mean_b, corr, asm, entropy, hx, hy, mi,
-    ])
-    out[~ok] = np.nan
-    return out
-
-
-def _shape_stats_vec(snap: np.ndarray) -> np.ndarray:
-    """(n, 11) moment snapshots [n, su, sy, suu, syy, suy, path, umin,
-    umax, ymin, ymax] → (n, 7) shape stats (guards mirror
-    kernels.shape_prefix)."""
-    (nn, su, sy, suu, syy, suy, path, umin, umax, ymin, ymax) = snap.T
-    with np.errstate(divide="ignore", invalid="ignore"):
-        mu, my = su / nn, sy / nn
-        a = suu / nn - mu * mu
-        c2 = syy / nn - my * my
-        b = suy / nn - mu * my
-        tr = a + c2
-        disc = np.sqrt(((a - c2) / 2.0) ** 2 + b * b)
-        l1 = tr / 2.0 + disc
-        l2 = np.clip(tr / 2.0 - disc, 0.0, None)
-        valid = (nn >= 2) & (l1 > 0)
-        major = np.where(valid, 2.0 * np.sqrt(np.clip(l1, 0, None)), np.nan)
-        minor = np.where(valid, 2.0 * np.sqrt(l2), np.nan)
-        ecc = np.where(
-            valid, np.sqrt(np.clip((l1 - l2) / np.where(l1 > 0, l1, 1.0), 0, 1)),
-            np.nan,
-        )
-        vx = np.where(np.abs(b) > 1e-12, b, np.where(a >= c2, 1.0, 0.0))
-        vy = np.where(np.abs(b) > 1e-12, l1 - a, np.where(a >= c2, 0.0, 1.0))
-        angle = np.where(
-            valid & (disc > 1e-12), np.arctan2(vy, vx) % np.pi, np.nan
-        )
-        two = nn >= 2
-        area = (umax - umin) * (ymax - ymin)
-        compacity = np.where(
-            two & (area > 0), path * path / (4 * np.pi * area), np.nan
-        )
-    return np.column_stack([
-        major, minor, angle, ecc,
-        np.where(two, path, np.nan), np.where(two, area, np.nan), compacity,
-    ])
-
-
-def _runlen_stats_vec(snap: np.ndarray, np1: np.ndarray) -> np.ndarray:
-    """(n, 15) accumulator snapshots [r, c_sre, c_lre, c_gln, c_lgre,
-    c_hgre, 8 joint emphases, c_rln] → (n, 18) GLRLM stats."""
-    r = snap[:, 0]
-    mean_len = np1 / r
-    lre = snap[:, 2] / r
-    cols = [r, r / np1, mean_len, snap[:, 1] / r, lre, lre - mean_len**2]
-    cols += [snap[:, j] / r for j in range(3, 15)]
-    # order: gln, lgre, hgre at 3..5; joints 6..13; rln last (14) — map
-    # into RUNLEN_OUT order [... gln lgre hgre RLN sr* lr*]
-    out = np.column_stack(cols)
-    # current layout: [r, rp, mean_len, sre, lre, rlvar, gln, lgre,
-    #                  hgre, srlge, srhge, srmge, srege, lrlge, lrhge,
-    #                  lrmge, lrege, rln] — move rln before the joints
-    reordered = np.empty_like(out)
-    reordered[:, :9] = out[:, :9]
-    reordered[:, 9] = out[:, 17]       # rln
-    reordered[:, 10:18] = out[:, 9:17]
-    return reordered
-
-
-def _runlen_advance(st: list, hist: dict, v: int, g: int) -> None:
-    """Advance ONE signal's run-length state by one row of level ``v``
-    — the streaming twin of the batch kernels.runlen_prefix identities
-    (same per-row deltas, same signed dec/inc RLN bookkeeping), with
-    the sufficient statistics as scalars + the sparse run-length
-    histogram (distinct lengths are O(sqrt(rows)), so state stays
-    tiny)."""
-    if st[0] == 0.0 or v != int(st[1]):  # new run
-        st[0] += 1.0
-        st[1] = float(v)
-        st[2] = 1.0
-        rvi = 17 + v
-        st[rvi] += 1.0
-        st[5] += 2.0 * st[rvi] - 1.0              # gln
-        short_d = 1.0
-        long_d = 1.0
-        low = 1.0 / (v + 1) ** 2
-        high = float((v + 1) ** 2)
-        st[6] += low                               # lgre
-        st[7] += high                              # hgre
-        c1 = hist.get(1, 0)
-        st[16] += 2.0 * c1 + 1.0                   # rln Σc²: inc bucket 1
-        hist[1] = c1 + 1
-    else:  # grow current run
-        l = int(st[2]) + 1
-        st[2] = float(l)
-        short_d = 1.0 / l**2 - 1.0 / (l - 1) ** 2
-        long_d = 2.0 * l - 1.0
-        low = 1.0 / (v + 1) ** 2
-        high = float((v + 1) ** 2)
-        cprev = hist.get(l - 1, 0)
-        st[16] += -(2.0 * cprev - 1.0)             # dec bucket l−1
-        if cprev == 1:
-            del hist[l - 1]
-        else:
-            hist[l - 1] = cprev - 1
-        cl = hist.get(l, 0)
-        st[16] += 2.0 * cl + 1.0                   # inc bucket l
-        hist[l] = cl + 1
-    dc = abs(v - (g - 1) / 2.0)
-    midw = 1.0 / (dc + 1) ** 2
-    extw = (dc + 1) ** 2
-    st[3] += short_d                               # sre
-    st[4] += long_d                                # lre
-    st[8] += low * short_d                         # srlge
-    st[9] += high * short_d                        # srhge
-    st[10] += midw * short_d                       # srmge
-    st[11] += extw * short_d                       # srege
-    st[12] += low * long_d                         # lrlge
-    st[13] += high * long_d                        # lrhge
-    st[14] += midw * long_d                        # lrmge
-    st[15] += extw * long_d                        # lrege
 
 
 class _MaxAccumulatorParam:
@@ -436,20 +206,57 @@ _BUF_DTYPES = (
 
 def _extract(rows: pd.DataFrame) -> dict[str, np.ndarray]:
     """Sorted micro-batch rows → the plain-array representation the
-    state machine (and the state-carried reorder buffer) works on."""
-    rows = rows.sort_values(["ts", "turn_idx"], kind="mergesort")
+    kernels (and the state-carried reorder buffer) work on."""
+    rows = rows.sort_values(["ts_us", "turn_idx"], kind="mergesort")
     return {
-        "us": rows["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64),
+        "us": rows["ts_us"].to_numpy(dtype=np.int64),
         "turn": rows["turn_idx"].to_numpy(dtype=np.int64),
-        "rolei": rows["role"].map(ROLE_IDX).fillna(KA - 1)
-        .to_numpy(dtype=np.int64),
+        "rolei": _role_idx_array(rows["role"]),
         "htool": rows["tool"].notna().to_numpy().astype(np.int64),
         "tlen": rows["tlen"].to_numpy(dtype=np.float64),
     }
 
 
-def _take(arr: dict[str, np.ndarray], mask) -> dict[str, np.ndarray]:
-    return {k: v[mask] for k, v in arr.items()}
+def _features(
+    conv_id: str, arr: dict[str, np.ndarray], carry: dict[str, dict]
+) -> pd.DataFrame:
+    """One conversation's accepted micro-batch rows through the batch
+    kernels, each family's carried state threaded in and replaced by
+    its end state. The signals are built as ``compute_features_pdf``
+    builds them."""
+    us, tlen = arr["us"], arr["tlen"]
+    m = len(us)
+    conv = np.zeros(m, dtype=np.int64)
+    first = np.zeros(m, dtype=bool)
+    first[0] = True
+    lev = discretize_log(tlen, K)
+    # absolute turn positions; every family state counts the rows seen
+    pos = np.arange(m) + int(carry["cooc"].get("pos", [0])[0])
+    signals = {
+        "role": arr["rolei"], "has_tool": arr["htool"], "tlen4": lev,
+        "posb": np.minimum(pos // 4, 3),
+    }
+    data = {
+        "conv_id": conv_id,
+        "turn_idx": arr["turn"].astype(np.int32),
+        # tz-aware, so Spark stores the instant whatever the session zone
+        "ts": pd.Series(us.astype("datetime64[us]")).dt.tz_localize("UTC"),
+    }
+    stats, carry["cooc"] = cooc_prefix(conv, first, lev, 1, K, carry["cooc"])
+    data.update({f"cooc_{s}_d1_k4": stats[s] for s in COOC_OUT})
+    stats, carry["shape"] = shape_moments_prefix(
+        conv, first, us * 1000 / 1e9, tlen, carry["shape"]
+    )
+    data.update({f"shape_{s}": stats[s] for s in SHAPE_OUT})
+    stats, carry["xcooc"] = xcooc_prefix(
+        conv, first, arr["rolei"], lev, 1, carry["xcooc"]
+    )
+    data.update({f"xcooc_{s}_d1": stats[s] for s in XCOOC_OUT})
+    for sig, g in RUNLEN_SIGS:
+        f = f"runlen_{sig}"
+        stats, carry[f] = runlen_prefix(conv, first, signals[sig], g, carry[f])
+        data.update({f"runlen_{s}_{sig}": stats[s] for s in RUNLEN_OUT})
+    return pd.DataFrame(data)
 
 
 def _update(
@@ -464,82 +271,33 @@ def _update(
         arr = {k: np.empty(0, dtype=dt) for k, dt in _BUF_DTYPES}
     buffering = late_policy == "buffer"
 
-    n_late = 0
-    base = 18 + 3 * len(RUNLEN_SIGS)
+    nc = len(CARRIED)
     if state.exists:
         got = state.get
-        (counts_l, prev_lev, n, su, sy, suu, syy, suy, path,
-         umin, umax, ymin, ymax, t0_us, prev_u, prev_y,
-         xcounts_l, prev_role) = got[:18]
-        last_us, last_turn, n_late = got[base], got[base + 1], got[base + 2]
-        counts = list(counts_l)
-        xcounts = list(xcounts_l)
-        rl_states, rl_hists = [], []
-        for si in range(len(RUNLEN_SIGS)):
-            sc, hl, hc = got[18 + 3 * si : 18 + 3 * si + 3]
-            rl_states.append(list(sc))
-            rl_hists.append(dict(zip(hl, hc)))
-        # buf_* fields are buffer-era (STATE_SCHEMA grew in round 6):
-        # pre-buffer checkpoints are NOT restart-compatible (Spark's
-        # state-store schema check rejects them up front); this guard
-        # covers validation-disabled deployments / null arrays by
-        # degrading missing buffer fields to an empty buffer
+        carry = {
+            f: {k: np.asarray(v, dtype=np.float64) for k, v in got[i].items()}
+            for i, f in enumerate(CARRIED)
+        }
+        last_us, last_turn, n_late = got[nc:nc + 3]
         pend = {
-            k: np.asarray(
-                got[base + 3 + i]
-                if len(got) > base + 3 + i and got[base + 3 + i] is not None
-                else (),
-                dtype=dt,
-            )
+            k: np.asarray(got[nc + 3 + i], dtype=dt)
             for i, (k, dt) in enumerate(_BUF_DTYPES)
         }
     else:
         # no cross-batch high-water mark yet — sentinel below any real
         # timestamp so an intra-batch replay in the conversation's FIRST
         # batch still routes through the late policy
-        last_us, last_turn = -(2**63), -1
-        counts = [0.0] * (K * K)
-        xcounts = [0.0] * (KA * K)
-        prev_lev, prev_role, n = -1, -1, 0
-        su = sy = suu = syy = suy = path = 0.0
-        umin = ymin = np.inf
-        umax = ymax = -np.inf
-        t0_us = -1  # anchored lazily to the first ACCEPTED row below
-        prev_u = prev_y = 0.0
-        rl_states = [
-            [0.0] * (3 + _RL_ACC + g) for _, g in RUNLEN_SIGS
-        ]
-        rl_hists = [dict() for _ in RUNLEN_SIGS]
+        last_us, last_turn, n_late = -(2**63), -1, 0
+        carry = {f: {} for f in CARRIED}
         pend = {k: np.empty(0, dtype=dt) for k, dt in _BUF_DTYPES}
 
     if buffering:
-        # watermarked reorder buffer: hold every row until the event-time
-        # watermark passes it, then release in (ts, turn_idx) order — a
-        # shuffled micro-batch replay within the watermark delay emits
-        # the exact batch output. Rows later than even that horizon fall
-        # through to drop-with-count below.
         wm_us = max(state.getCurrentWatermarkMs(), 0) * 1000
-        merged = {
-            k: np.concatenate([pend[k], arr[k]]) for k, _ in _BUF_DTYPES
-        }
-        order = np.lexsort((merged["turn"], merged["us"]))
-        merged = _take(merged, order)
-        ready = merged["us"] < wm_us
-        pend = _take(merged, ~ready)
-        arr = _take(merged, ready)
+        arr, pend = _release(pend, arr, wm_us)
 
     def _persist():
         state.update((
-            [int(v) for v in counts], int(prev_lev), int(n),
-            float(su), float(sy), float(suu), float(syy), float(suy),
-            float(path), float(umin), float(umax), float(ymin),
-            float(ymax), int(t0_us), float(prev_u), float(prev_y),
-            [int(v) for v in xcounts], int(prev_role),
-            *[x for si in range(len(RUNLEN_SIGS)) for x in (
-                [float(v) for v in rl_states[si]],
-                [int(v) for v in sorted(rl_hists[si])],
-                [int(rl_hists[si][v]) for v in sorted(rl_hists[si])],
-            )],
+            *[{k: v.tolist() for k, v in carry[f].items()} for f in CARRIED],
             int(last_us), int(last_turn), int(n_late),
             *[pend[k].tolist() for k, _ in _BUF_DTYPES],
         ))
@@ -566,81 +324,10 @@ def _update(
             _persist()
         return
 
-    us = arr["us"]
-    if n == 0:
-        t0_us = int(us[0])
-    tlen = arr["tlen"]
-    levs = discretize_log(tlen, K)
-    roles = arr["rolei"]
-    has_tool = arr["htool"]
-
-    # ---- per-row STATE updates only (plain python, no numpy in the
-    # loop); stat evaluation is vectorized over the snapshots below
-    m = len(us)
-    cooc_snap = np.empty((m, K * K))
-    xcooc_snap = np.empty((m, KA * K))
-    shape_snap = np.empty((m, 11))
-    rl_snaps = [np.empty((m, 15)) for _ in RUNLEN_SIGS]
-    np1s = np.empty(m)
-    hypot = math.hypot
-    for i in range(m):
-        lev = int(levs[i])
-        role = int(roles[i])
-        pos = n  # 0-based row index within the conversation
-        if prev_lev >= 0:
-            counts[prev_lev * K + lev] += 1.0
-            counts[lev * K + prev_lev] += 1.0
-        if prev_role >= 0:
-            xcounts[prev_role * K + lev] += 1.0
-        prev_lev = lev
-        prev_role = role
-        u = (us[i] - t0_us) / 1e6
-        y = tlen[i]
-        if n >= 1:
-            path += float(hypot(u - prev_u, y - prev_y))
-        prev_u, prev_y = u, y
-        n += 1
-        su += u; sy += y
-        suu += u * u; syy += y * y; suy += u * y
-        if u < umin: umin = u
-        if u > umax: umax = u
-        if y < ymin: ymin = y
-        if y > ymax: ymax = y
-
-        cooc_snap[i] = counts
-        xcooc_snap[i] = xcounts
-        shape_snap[i] = (n, su, sy, suu, syy, suy, path,
-                         umin, umax, ymin, ymax)
-        np1s[i] = n
-        sig_vals = (role, int(has_tool[i]), lev, min(pos // 4, 3))
-        for si, (_, g) in enumerate(RUNLEN_SIGS):
-            st = rl_states[si]
-            _runlen_advance(st, rl_hists[si], sig_vals[si], g)
-            rl_snaps[si][i, 0] = st[0]
-            rl_snaps[si][i, 1:15] = st[3:17]
-
-    last_us, last_turn = int(us[-1]), int(arr["turn"][-1])
+    out = _features(key[0], arr, carry)
+    last_us, last_turn = int(arr["us"][-1]), int(arr["turn"][-1])
     _persist()
-
-    data = {
-        "conv_id": key[0],
-        "turn_idx": arr["turn"].astype(np.int32),
-        "ts": us.astype("datetime64[us]"),
-    }
-    cooc_stats = _cooc_stats_vec(cooc_snap.reshape(m, K, K))
-    for j, s_ in enumerate(COOC_OUT):
-        data[f"cooc_{s_}_d1_k4"] = cooc_stats[:, j]
-    shape_stats = _shape_stats_vec(shape_snap)
-    for j, s_ in enumerate(SHAPE_OUT):
-        data[f"shape_{s_}"] = shape_stats[:, j]
-    xc = _xcooc_stats_vec(xcooc_snap.reshape(m, KA, K))
-    for j, s_ in enumerate(XCOOC_OUT):
-        data[f"xcooc_{s_}_d1"] = xc[:, j]
-    for si, (sig, _) in enumerate(RUNLEN_SIGS):
-        rl = _runlen_stats_vec(rl_snaps[si], np1s)
-        for j, s_ in enumerate(RUNLEN_OUT):
-            data[f"runlen_{s_}_{sig}"] = rl[:, j]
-    yield pd.DataFrame(data)
+    yield out
 
 
 def streaming_prefix_features(
@@ -649,8 +336,10 @@ def streaming_prefix_features(
     watermark_delay: str = "0 seconds",
     state_metrics: dict | None = None,
 ) -> DataFrame:
-    """Per-turn co-occurrence (lag 1, K=4) + shape prefix features over
-    a live transcript stream, state-incremental per conversation.
+    """Per-turn prefix features (cooc lag 1 / 4 levels, xcooc lag 1, the
+    18 run-length stats of the four signals, and the 7 shape moment
+    stats) over a live transcript stream, state-incremental per
+    conversation.
 
     ``late_policy``: what to do with rows that arrive at or before the
     conversation's (ts, turn_idx) high-water mark —
@@ -681,15 +370,15 @@ def streaming_prefix_features(
         return _update(key, pdfs, state, late_policy, state_metrics)
 
     src = stream.select(
-        "conv_id", "turn_idx", "ts", "role", "tool",
+        "conv_id", "turn_idx", "role", "tool",
+        epoch_us("ts").alias("ts_us"),
         F.length("text").cast("double").alias("tlen"),
     )
     timeout = GroupStateTimeout.NoTimeout
     if late_policy == "buffer":
-        # watermarks require TIMESTAMP (with local tz); transcript logs
-        # are often NTZ — the session runs UTC, so the cast is exact
+        # watermarks need a TIMESTAMP column; the kernels read ts_us
         src = src.withColumn(
-            "ts", F.col("ts").cast("timestamp")
+            "ts", F.timestamp_micros("ts_us")
         ).withWatermark("ts", watermark_delay)
         timeout = GroupStateTimeout.EventTimeTimeout
     return src.groupBy("conv_id").applyInPandasWithState(

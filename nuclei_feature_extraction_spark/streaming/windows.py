@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from nuclei_feature_extraction_spark.functions.timeutil import epoch_us
 from nuclei_feature_extraction_spark.plans.fused import (
     WINDOW_FEATURE_COLS,
     _window_features_pdf,
@@ -62,15 +63,15 @@ def _update(
     from nuclei_feature_extraction_spark.streaming.features import (
         _apply_late_policy,
         _late_mask,
+        _release,
     )
 
     dfs = [p for p in pdfs if len(p)]
     if dfs:
         rows = pd.concat(dfs, ignore_index=True)
-        rows = rows.sort_values(["ts", "turn_idx"], kind="mergesort")
+        rows = rows.sort_values(["ts_us", "turn_idx"], kind="mergesort")
         arr = {
-            "us": rows["ts"].to_numpy(dtype="datetime64[us]")
-            .astype(np.int64),
+            "us": rows["ts_us"].to_numpy(dtype=np.int64),
             "turn": rows["turn_idx"].to_numpy(dtype=np.int64),
             "role": rows["role"].to_numpy(dtype=object),
             "tlen": rows["tlen"].to_numpy(dtype=np.float64),
@@ -120,15 +121,8 @@ def _update(
         }
 
     if buffering:
-        # hold rows until the event-time watermark passes them, release
-        # in (ts, turn_idx) order — see streaming/features.py
         wm_us = max(state.getCurrentWatermarkMs(), 0) * 1000
-        merged = {k: np.concatenate([pend[k], arr[k]]) for k in arr}
-        order = np.lexsort((merged["turn"], merged["us"]))
-        merged = {k: v[order] for k, v in merged.items()}
-        ready = merged["us"] < wm_us
-        pend = {k: v[~ready] for k, v in merged.items()}
-        arr = {k: v[ready] for k, v in merged.items()}
+        arr, pend = _release(pend, arr, wm_us)
 
     def _persist(last_turn):
         state.update((
@@ -185,7 +179,10 @@ def _update(
     data = {
         "conv_id": key[0],
         "turn_idx": arr["turn"].astype(np.int32),
-        "ts": us_new.astype("datetime64[us]"),
+        # tz-aware, so Spark stores the instant whatever the session zone
+        "ts": pd.Series(us_new.astype("datetime64[us]")).dt.tz_localize(
+            "UTC"
+        ),
         "session_id": sess[t:].astype(np.int32),
     }
     for k in (1, 2, 3):
@@ -241,15 +238,14 @@ def streaming_window_features(
                        state_metrics)
 
     src = stream.select(
-        "conv_id", "turn_idx", "ts", "role",
+        "conv_id", "turn_idx", "role", epoch_us("ts").alias("ts_us"),
         F.length("text").cast("double").alias("tlen"),
     )
     timeout = GroupStateTimeout.NoTimeout
     if late_policy == "buffer":
-        # watermarks require TIMESTAMP (with local tz); the session runs
-        # UTC, so casting NTZ transcript logs is exact
+        # watermarks need a TIMESTAMP column; the kernels read ts_us
         src = src.withColumn(
-            "ts", F.col("ts").cast("timestamp")
+            "ts", F.timestamp_micros("ts_us")
         ).withWatermark("ts", watermark_delay)
         timeout = GroupStateTimeout.EventTimeTimeout
     return src.groupBy("conv_id").applyInPandasWithState(

@@ -1,8 +1,12 @@
 """Stateful streaming (applyInPandasWithState) == batch sessionize,
 replayed across 2 micro-batches that split conversations mid-stream."""
 
+import contextlib
+import re
+
 import numpy as np
 import pandas as pd
+import pytest
 
 from nuclei_feature_extraction_spark.operators import sessionize
 from nuclei_feature_extraction_spark.streaming.stateful import (
@@ -228,10 +232,86 @@ def test_stateless_text_operators_run_on_streams(spark, tmp_path):
             assert (a.astype(str) == b.astype(str)).all(), c
 
 
-def test_streaming_prefix_features_match_batch(spark, tiny_pdf, tmp_path):
-    """Streaming prefix kernels (state-incremental cooc d1k4 + shape) ==
-    the batch prefix_features output, column for column, across a
-    2-micro-batch replay that splits every conversation mid-stream."""
+@contextlib.contextmanager
+def _session_tz(spark, tz):
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def _write_parts(parts, src, ts_type):
+    """One parquet file per micro-batch. ``ts_type='timestamp'`` writes
+    ``ts`` tz-aware (Spark reads TIMESTAMP), ``'ntz'`` naive (Spark
+    reads TIMESTAMP_NTZ)."""
+    for i, part in enumerate(parts):
+        if ts_type == "timestamp":
+            part = part.assign(ts=part["ts"].dt.tz_localize("UTC"))
+        part.to_parquet(src / f"part-{i:03d}.parquet", index=False)
+
+
+def _replay(spark, src, op, name, ckpt, tz):
+    """Stream the files of ``src`` one per micro-batch through ``op``
+    into the memory sink ``name``, in session timezone ``tz``."""
+    schema = spark.read.parquet(str(src)).schema
+    with _session_tz(spark, tz):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        q = (
+            op(stream)
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", str(ckpt))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return (
+        spark.sql(f"SELECT * FROM {name}").toPandas()
+        .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    )
+
+
+def _sink_name(*parts):
+    return re.sub(r"\W", "_", "_".join(parts))
+
+
+def _assert_ts_roundtrip(got, pdf):
+    """The emitted ts is the input instant (read back in UTC)."""
+    want = pdf.sort_values(["conv_id", "turn_idx"])["ts"].to_numpy()
+    assert (got["ts"].to_numpy(dtype="datetime64[us]")
+            == want.astype("datetime64[us]")).all()
+
+
+@pytest.mark.parametrize(
+    "tz,ts_type,split",
+    [
+        pytest.param("UTC", "timestamp", "halves", id="UTC"),
+        pytest.param("America/New_York", "timestamp", "halves",
+                     id="America/New_York"),
+        pytest.param("Asia/Kolkata", "timestamp", "halves",
+                     id="Asia/Kolkata"),
+        # three micro-batches; in the middle one, every other
+        # conversation has exactly one row (lag, run and moment
+        # continuation across a 1-row batch)
+        pytest.param("UTC", "ntz", "three_way", id="UTC-ntz-three_way"),
+    ],
+)
+def test_streaming_prefix_features_match_batch(
+    spark, tiny_pdf, tmp_path, tz, ts_type, split
+):
+    """Streaming prefix kernels (cooc d1k4, shape moments, xcooc d1,
+    runlen) == the batch prefix_features output, column for column,
+    across micro-batch replays that split every conversation
+    mid-stream, in any session timezone."""
     from nuclei_feature_extraction_spark.functions.kernels import (
         prefix_features,
     )
@@ -247,35 +327,21 @@ def test_streaming_prefix_features_match_batch(spark, tiny_pdf, tmp_path):
     src = tmp_path / "featsrc"
     src.mkdir()
     pdf = tiny_pdf.sort_values(["conv_id", "ts", "turn_idx"])
-    half = pdf.groupby("conv_id").cumcount() < pdf.groupby("conv_id")[
-        "turn_idx"
-    ].transform("size") // 2
-    pdf[half].to_parquet(src / "part-000.parquet", index=False)
-    pdf[~half].to_parquet(src / "part-001.parquet", index=False)
+    cc = pdf.groupby("conv_id").cumcount()
+    size = pdf.groupby("conv_id")["turn_idx"].transform("size")
+    if split == "halves":
+        half = cc < size // 2
+        parts = [pdf[half], pdf[~half]]
+    else:
+        odd = pdf["conv_id"].str[-1].astype(int) % 2 == 1
+        lo = cc < size // 3
+        mid = ~lo & np.where(odd, cc < 2 * size // 3, cc == size // 3)
+        parts = [pdf[lo], pdf[mid], pdf[~lo & ~mid]]
+    _write_parts(parts, src, ts_type)
 
-    schema = spark.read.parquet(str(src)).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_prefix_features(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sfeat")
-        .option("checkpointLocation", str(tmp_path / "fckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = (
-        spark.sql("SELECT * FROM sfeat").toPandas()
-        .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    )
+    got = _replay(spark, src, streaming_prefix_features,
+                  _sink_name("sfeat", tz, ts_type, split),
+                  tmp_path / "fckpt", tz)
     cols = (
         [f"cooc_{s}_d1_k4" for s in COOC_OUT]
         + [f"shape_{s}" for s in SHAPE_OUT]
@@ -294,6 +360,7 @@ def test_streaming_prefix_features_match_batch(spark, tiny_pdf, tmp_path):
         .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     )
     assert len(got) == len(want) == len(tiny_pdf)
+    _assert_ts_roundtrip(got, tiny_pdf)
     for c in cols:
         # shape tolerances mirror the batch-vs-naive test: the closed
         # form amplifies ~1e-11 cancellation noise near rank-1 input
@@ -382,12 +449,23 @@ def test_streaming_features_resume_from_checkpoint(spark, tiny_pdf, tmp_path):
         )
 
 
-def test_streaming_window_features_match_batch(spark, tiny_pdf, tmp_path):
+@pytest.mark.parametrize(
+    "tz,ts_type",
+    [
+        pytest.param("UTC", "ntz", id="UTC-ntz"),
+        pytest.param("UTC", "timestamp", id="UTC"),
+        pytest.param("America/New_York", "timestamp", id="America/New_York"),
+        pytest.param("Asia/Kolkata", "timestamp", id="Asia/Kolkata"),
+    ],
+)
+def test_streaming_window_features_match_batch(
+    spark, tiny_pdf, tmp_path, tz, ts_type
+):
     """Streaming window stack (sessionize + lag + rolling/masked/
     circular + bank + Gabor, 45 columns) == the batch fused window
     implementation, across a 3-micro-batch replay that slices every
     conversation twice — the carried 64-row tail must reproduce every
-    lookback exactly."""
+    lookback exactly, in any session timezone."""
     from nuclei_feature_extraction_spark.plans.fused import (
         _window_features_pdf,
     )
@@ -402,33 +480,12 @@ def test_streaming_window_features_match_batch(spark, tiny_pdf, tmp_path):
     cc = pdf.groupby("conv_id").cumcount()
     size = pdf.groupby("conv_id")["turn_idx"].transform("size")
     third1, third2 = cc < size // 3, (cc >= size // 3) & (cc < 2 * size // 3)
-    pdf[third1].to_parquet(src / "p0.parquet", index=False)
-    pdf[third2].to_parquet(src / "p1.parquet", index=False)
-    pdf[~(third1 | third2)].to_parquet(src / "p2.parquet", index=False)
+    _write_parts(
+        [pdf[third1], pdf[third2], pdf[~(third1 | third2)]], src, ts_type
+    )
 
-    schema = spark.read.parquet(str(src)).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_window_features(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("swin")
-        .option("checkpointLocation", str(tmp_path / "wfck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = (
-        spark.sql("SELECT * FROM swin").toPandas()
-        .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    )
+    got = _replay(spark, src, streaming_window_features,
+                  _sink_name("swin", tz, ts_type), tmp_path / "wfck", tz)
     bpdf = pdf.copy()
     bpdf["tlen"] = bpdf["text"].str.len().astype(float)
     want = _window_features_pdf(bpdf.reset_index(drop=True))
@@ -437,6 +494,7 @@ def test_streaming_window_features_match_batch(spark, tiny_pdf, tmp_path):
     want = want.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
 
     assert len(got) == len(want) == len(tiny_pdf)
+    _assert_ts_roundtrip(got, tiny_pdf)
     assert (got["session_id"].to_numpy()
             == want["session_id"].to_numpy()).all()
     for k in (1, 2, 3):
